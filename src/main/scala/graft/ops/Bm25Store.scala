@@ -81,10 +81,8 @@ object Bm25Store {
 
   /** Broadcast gate for the ingest report's vocabulary probe: a shard
     * with more distinct terms than this probes bucket by bucket
-    * instead of broadcasting everything at once (an unconditional
-    * broadcast is an un-refusable driver OOM —
-    * [[ExactSubstrStore.MaxBroadcastKeys]]). */
-  val MaxBroadcastKeys: Long = 4000000L
+    * ([[ShardTiers.MaxBroadcastKeys]]). */
+  val MaxBroadcastKeys: Long = ShardTiers.MaxBroadcastKeys
 
   private def postingsPath(root: String) = s"$root/postings"
   private def termsPath(root: String) = s"$root/terms"
@@ -124,14 +122,14 @@ object Bm25Store {
     spark.range(1).select(lit(p.tokenizer).as("tokenizer"),
       lit(p.nBuckets).as("n_buckets"))
       .write.mode("overwrite").parquet(metaPath(root))
-    StoreMeta.put("bm25", root, p)
+    StoreMeta.put(spark, "bm25", metaPath(root), p)
   }
 
   /** The parameters this store was built with (memoized per root —
     * [[StoreMeta]]: params are immutable between builds, so the
     * per-call parquet read was one pure-overhead Spark execution). */
   def readMeta(spark: SparkSession, root: String): Params =
-    StoreMeta.cached("bm25", root) {
+    StoreMeta.cached(spark, "bm25", metaPath(root)) {
       val r = spark.read.parquet(metaPath(root)).head()
       Params(r.getAs[String]("tokenizer"), r.getAs[Int]("n_buckets"))
     }
@@ -262,45 +260,15 @@ object Bm25Store {
     val shardTerms = allTerms
       .filter(col("ingest_shard") === lit(shardId))
       .select(col("term"), col("__bkt"))
-    val prior = allTerms.filter(col("ingest_shard") =!= lit(shardId))
-      .select(col("term"), col("__bkt"))
-    val (seenCount, probeTmp) =
-      if (totalTerms <= maxBroadcastKeys) {
-        // gate path: the shard vocabulary broadcasts whole, straight off
-        // the terms sidecar scan — no persist (single consumer), no
-        // per-bucket counts needed
-        (prior.select(col("term"))
-          .join(broadcast(shardTerms.select(col("term"))), Seq("term"),
-            "left_semi")
-          .distinct().count(), None)
-      } else {
-        // jumbo path: per-bucket legs need the per-bucket key counts and
-        // scan the shard vocabulary once per bucket — worth one persist
-        val st = shardTerms
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val bucketCounts = st.groupBy(col("__bkt"))
-            .agg(count(lit(1)).as("n"))
-            .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq.sortBy(_._1)
-          val tmp = s"$root/__probe_ingest"
-          val fs = new org.apache.hadoop.fs.Path(tmp)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-          graft.bench.StageTimers.time("bm25store.probe_legs") {
-            bucketCounts.foreach { case (b, nKeys) =>
-              val keysB = st.filter(col("__bkt") === lit(b))
-                .select(col("term"))
-              val gated = if (nKeys <= maxBroadcastKeys) broadcast(keysB)
-                else keysB // single over-gate bucket: 1/nBuckets shuffle
-              prior.filter(col("__bkt") === lit(b)).select(col("term"))
-                .join(gated, Seq("term"), "left_semi")
-                .write.mode("append").parquet(tmp)
-            }
-          }
-          (spark.read.schema(StructType(termsSchema.take(1)))
-            .parquet(tmp).distinct().count(), Some(tmp))
-        } finally st.unpersist(false)
-      }
+    // the write observed the shard's distinct-term count, so the gate
+    // path needs no per-bucket counts
+    val (seen, probeTmp) = ShardTiers.probe(root, "__probe_ingest",
+      "bm25store.probe_legs",
+      allTerms.filter(col("ingest_shard") =!= lit(shardId))
+        .select(col("term"), col("__bkt")),
+      shardTerms, "term", totalTerms, maxBroadcastKeys)(
+      ShardTiers.bucketCounts(shardTerms))
+    val seenCount = seen.distinct().count()
     val report = statsRaw(spark, root)
       .filter(col("ingest_shard") === lit(shardId))
       .select(col("ingest_shard"), col("n_docs"), col("sum_dl"),
@@ -311,11 +279,7 @@ object Bm25Store {
     graft.bench.StageTimers.time("bm25store.report_write") {
       report.write.mode("overwrite").parquet(dir)
     }
-    probeTmp.foreach { t =>
-      new org.apache.hadoop.fs.Path(t)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(t), true)
-    }
+    ShardTiers.dropTemp(spark, probeTmp)
     spark.read.schema(reportSchema).parquet(dir)
   }
 
@@ -393,76 +357,23 @@ object Bm25Store {
         col("n_terms"))
   }
 
-  /** Fold posting shard partitions at or under `tierMaxBytes` into one
-    * tier partition (size-tiered: the daily small-shard tail compacts
-    * in shard-sized time, the accumulated base is untouched; default =
-    * global rewrite). Under the id-uniqueness contract the fold is
-    * pure concatenation; the (id, term) dedup exists ONLY for the
-    * crash-leftover case where a prior attempt's tier survived
-    * alongside not-yet-deleted sources. `stats/` rows are deliberately
-    * NEVER compacted: they are O(#shards-ever) scalar rows (a decade
-    * of daily shards is ~3,650 rows), and folding additive scalars
-    * cannot be made crash-exact without a commit protocol — a crash
-    * between a folded row landing and its sources' deletion would
-    * double-count N — while leaving them in place costs nothing.
-    * Returns (posting shards before, after). */
+  /** Size-tiered compaction of `postings/` under the [[ShardTiers]]
+    * protocol, with the `terms/` sidecar folded under the same tier id.
+    * Consolidation rules: under the id-uniqueness contract postings
+    * fold by pure concatenation, and the (id, term) dedup only repairs
+    * crash leftovers; terms are a membership set, one row per term.
+    * `stats/` rows are deliberately NEVER compacted: they are
+    * O(#shards-ever) scalar rows (a decade of daily shards is ~3,650
+    * rows), and folding additive scalars cannot be made crash-exact
+    * without a commit protocol — a crash between a folded row landing
+    * and its sources' deletion would double-count N — while leaving
+    * them in place costs nothing. Returns (posting shards before,
+    * after). */
   def compactShards(spark: SparkSession, root: String,
-      tierMaxBytes: Long = Long.MaxValue): (Int, Int) = {
-    val path = postingsPath(root)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(dir)) return (0, 0)
-    def listShards(): Seq[String] = fs.listStatus(dir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("ingest_shard="))
-      .map(_.getPath.getName.stripPrefix("ingest_shard="))
-    val before = listShards()
-    val sources = before.filter { s =>
-      fs.getContentSummary(
-        new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$s")).getLength <=
-        tierMaxBytes
-    }
-    if (sources.size <= 1) return (before.size, before.size)
-    val newId = "compacted_" + java.lang.Long.toHexString(
-      sources.sorted.map(s => s.hashCode.toLong).sum & Long.MaxValue)
-    val target = new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$newId")
-    if (!fs.exists(target)) {
-      val stage = new org.apache.hadoop.fs.Path(path + "__compact_stage")
-      fs.delete(stage, true) // leftover from a crashed attempt
-      postingsRaw(spark, root)
-        .filter(col("ingest_shard").isin(sources: _*))
-        .drop("ingest_shard")
-        .dropDuplicates("id", "term")
-        .write.mode("overwrite").partitionBy("__bkt").parquet(stage.toString)
-      require(fs.rename(stage, target), s"compact promote failed: $stage")
-    } // else: a prior run crashed between rename and source deletion —
-      // the deterministic name proves the target holds exactly these
-      // sources' postings; just finish the deletion
-    // the terms/ sidecar folds under the SAME tier id; its rows are a
-    // membership set (cross-shard duplicates expected), so the crash
-    // windows are the CdcStore digest semantics — a leftover source
-    // next to the tier only duplicates rows the probes distinct away
-    val tdirPath = termsPath(root)
-    val tdir = new org.apache.hadoop.fs.Path(tdirPath)
-    val tTarget = new org.apache.hadoop.fs.Path(tdir, s"ingest_shard=$newId")
-    val tSources = sources.filter(s =>
-      fs.exists(new org.apache.hadoop.fs.Path(tdir, s"ingest_shard=$s")))
-    if (!fs.exists(tTarget) && tSources.nonEmpty) {
-      val stage = new org.apache.hadoop.fs.Path(tdirPath + "__compact_stage")
-      fs.delete(stage, true)
-      termsRaw(spark, root)
-        .filter(col("ingest_shard").isin(tSources: _*))
-        .drop("ingest_shard")
-        .dropDuplicates("term")
-        .write.mode("overwrite").partitionBy("__bkt").parquet(stage.toString)
-      require(fs.rename(stage, tTarget), s"compact promote failed: $stage")
-    }
-    tSources.foreach { s =>
-      fs.delete(new org.apache.hadoop.fs.Path(tdir, s"ingest_shard=$s"), true)
-    }
-    sources.foreach { s =>
-      fs.delete(new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$s"), true)
-    }
-    (before.size, listShards().size)
-  }
+      tierMaxBytes: Long = Long.MaxValue): (Int, Int) =
+    ShardTiers.compact(spark, tierMaxBytes,
+      ShardTiers.Table(postingsPath(root), postingsSchema,
+        _.dropDuplicates("id", "term"), Seq("__bkt")),
+      ShardTiers.Table(termsPath(root), termsSchema,
+        _.dropDuplicates("term"), Seq("__bkt")))
 }

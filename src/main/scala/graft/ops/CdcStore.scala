@@ -64,10 +64,8 @@ object CdcStore {
   }
 
   /** Broadcast-probe gate: a shard with more distinct digests than
-    * this probes bucket by bucket instead of broadcasting everything
-    * at once (the [[ExactSubstrStore.MaxBroadcastKeys]] rationale —
-    * an unconditional broadcast is an un-refusable driver OOM). */
-  val MaxBroadcastKeys: Long = 4000000L
+    * this probes bucket by bucket ([[ShardTiers.MaxBroadcastKeys]]). */
+  val MaxBroadcastKeys: Long = ShardTiers.MaxBroadcastKeys
 
   private def digestsPath(root: String) = s"$root/digests"
   private def metaPath(root: String) = s"$root/meta"
@@ -96,14 +94,14 @@ object CdcStore {
       lit(p.divisor).as("divisor"), lit(p.minLen).as("min_len"),
       lit(p.maxLen).as("max_len"), lit(p.nBuckets).as("n_buckets"))
       .write.mode("overwrite").parquet(metaPath(root))
-    StoreMeta.put("cdc", root, p)
+    StoreMeta.put(spark, "cdc", metaPath(root), p)
   }
 
   /** The parameters this store was built with (memoized per root —
     * [[StoreMeta]]: params are immutable between builds, so the
     * per-call parquet read was one pure-overhead Spark execution). */
   def readMeta(spark: SparkSession, root: String): Params =
-    StoreMeta.cached("cdc", root) {
+    StoreMeta.cached(spark, "cdc", metaPath(root)) {
       val r = spark.read.parquet(metaPath(root)).head()
       Params(r.getAs[String]("family"), r.getAs[Int]("mask_bits"),
         r.getAs[Int]("k"), r.getAs[Int]("divisor"), r.getAs[Int]("min_len"),
@@ -205,37 +203,15 @@ object CdcStore {
     }
     val all = digestsRaw(spark, root, p)
     val shardD = all.filter(col("ingest_shard") === lit(shardId))
-    val prior = all.filter(col("ingest_shard") =!= lit(shardId))
       .select(col("digest"), col("__bkt"))
-    val bucketCounts = shardD.groupBy(col("__bkt"))
-      .agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq.sortBy(_._1)
-    val totalKeys = bucketCounts.map(_._2).sum
-    val (matched, probeTmp) =
-      if (totalKeys <= maxBroadcastKeys) {
-        (prior.select(col("digest"))
-          .join(broadcast(shardD.select(col("digest"))), Seq("digest"),
-            "left_semi")
-          .distinct(), None)
-      } else {
-        val tmp = s"$root/__probe_ingest"
-        val fs = new org.apache.hadoop.fs.Path(tmp)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-        graft.bench.StageTimers.time("cdcstore.probe_legs") {
-          bucketCounts.foreach { case (b, nKeys) =>
-            val keysB = shardD.filter(col("__bkt") === lit(b))
-              .select(col("digest"))
-            val gated = if (nKeys <= maxBroadcastKeys) broadcast(keysB)
-              else keysB // single over-gate bucket: 1/nBuckets shuffle
-            prior.filter(col("__bkt") === lit(b)).select(col("digest"))
-              .join(gated, Seq("digest"), "left_semi")
-              .write.mode("append").parquet(tmp)
-          }
-        }
-        (spark.read.schema(StructType(digestsSchema(p).take(1)))
-          .parquet(tmp).distinct(), Some(tmp))
-      }
+    val counts = ShardTiers.bucketCounts(shardD)
+    val totalKeys = counts.map(_._2).sum
+    val (priorHits, probeTmp) = ShardTiers.probe(root, "__probe_ingest",
+      "cdcstore.probe_legs",
+      all.filter(col("ingest_shard") =!= lit(shardId))
+        .select(col("digest"), col("__bkt")),
+      shardD, "digest", totalKeys, maxBroadcastKeys)(counts)
+    val matched = priorHits.distinct()
     val hit = matched.withColumn("__hit", lit(1))
     val gatedHit = if (totalKeys <= maxBroadcastKeys) broadcast(hit) else hit
     // the [[Cdc.chunkReuse]] minReuseLen semantics with minReuseLen =
@@ -263,59 +239,18 @@ object CdcStore {
     graft.bench.StageTimers.time("cdcstore.report_write") {
       report.write.mode("overwrite").parquet(dir)
     }
-    probeTmp.foreach { t =>
-      new org.apache.hadoop.fs.Path(t)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(t), true)
-    }
+    ShardTiers.dropTemp(spark, probeTmp)
     spark.read.schema(reportSchema).parquet(dir)
     } finally chunks.unpersist(false)
   }
 
-  /** Fold shard partitions at or under `tierMaxBytes` into one
-    * deduplicated tier partition (the family's size-tiered compaction:
-    * a daily small-shard tail compacts in shard-sized time, the
-    * accumulated base partition is untouched; default = global
-    * full rewrite). Crash-safe via the deterministic tier name: a
-    * re-run after the rename-done crash window finds the target and
-    * finishes source deletion instead of re-reading. Returns (shards
-    * before, shards after). */
+  /** Size-tiered compaction of `digests/` under the [[ShardTiers]]
+    * protocol. Consolidation rule: a membership set, so the tier keeps one
+    * row per digest (leftover duplicates fold away), bucket dirs kept.
+    * Returns (shards before, shards after). */
   def compactShards(spark: SparkSession, root: String,
-      tierMaxBytes: Long = Long.MaxValue): (Int, Int) = {
-    val p = readMeta(spark, root)
-    val path = digestsPath(root)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(dir)) return (0, 0)
-    def listShards(): Seq[String] = fs.listStatus(dir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("ingest_shard="))
-      .map(_.getPath.getName.stripPrefix("ingest_shard="))
-    val before = listShards()
-    val sources = before.filter { s =>
-      fs.getContentSummary(
-        new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$s")).getLength <=
-        tierMaxBytes
-    }
-    if (sources.size <= 1) return (before.size, before.size)
-    val newId = "compacted_" + java.lang.Long.toHexString(
-      sources.sorted.map(s => s.hashCode.toLong).sum & Long.MaxValue)
-    val target = new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$newId")
-    if (!fs.exists(target)) {
-      val stage = new org.apache.hadoop.fs.Path(path + "__compact_stage")
-      fs.delete(stage, true) // leftover from a crashed attempt
-      digestsRaw(spark, root, p)
-        .filter(col("ingest_shard").isin(sources: _*))
-        .drop("ingest_shard")
-        .dropDuplicates("digest")
-        .write.mode("overwrite").partitionBy("__bkt").parquet(stage.toString)
-      require(fs.rename(stage, target), s"compact promote failed: $stage")
-    } // else: a prior run crashed between rename and source deletion —
-      // the deterministic name proves the target holds exactly these
-      // sources' digests; just finish the deletion
-    sources.foreach { s =>
-      fs.delete(new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$s"), true)
-    }
-    (before.size, listShards().size)
-  }
+      tierMaxBytes: Long = Long.MaxValue): (Int, Int) =
+    ShardTiers.compact(spark, tierMaxBytes, ShardTiers.Table(
+      digestsPath(root), digestsSchema(readMeta(spark, root)),
+      _.dropDuplicates("digest"), Seq("__bkt")))
 }

@@ -116,7 +116,7 @@ object ExactSubstrStore {
       lit(p.minLen).as("min_len"), lit(p.digestKeys).as("digest_keys"),
       lit(p.nBuckets).as("n_buckets"))
       .write.mode("overwrite").parquet(metaPath(root))
-    StoreMeta.put("exsub", root, p)
+    StoreMeta.put(spark, "exsub", metaPath(root), p)
   }
 
   /** The parameters this index was built with (probes must match them;
@@ -126,7 +126,7 @@ object ExactSubstrStore {
     * Refuses a v1 (pre-bucket) index: its `windows/` has no `__bkt`
     * subdirectories, so every v2 read would silently see null buckets. */
   def readMeta(spark: SparkSession, root: String): Params =
-    StoreMeta.cached("exsub", root) {
+    StoreMeta.cached(spark, "exsub", metaPath(root)) {
     val df = spark.read.parquet(metaPath(root))
     require(df.columns.contains("n_buckets"),
       s"$root is a v1 (pre-key-bucketing) ExactSubstr index; rebuild it " +
@@ -202,72 +202,29 @@ object ExactSubstrStore {
   }
 
   /** Broadcast gate for the key semi-join: a shard's distinct window
-    * keys are ~its token count, and broadcasting is only sane while
-    * that fits comfortably on the driver/executors (8 B longs in
-    * digest mode → the default ~32 MB). A bigger shard probes BUCKET BY
-    * BUCKET instead (see [[addShard]]): each leg broadcasts only its
-    * bucket's keys against only its bucket's files, so index rows still
-    * never ride an exchange — the v1 layout's whole-index shuffle
-    * fallback (219s at the 10M 2%-shard smoke point; the bucketed legs
-    * read 33.6–40.4s there, BASELINE.md r16) is gone.
-    * Only a single BUCKET whose keys alone exceed the gate degrades to
-    * a shuffle semi-join, and then only over that bucket's 1/nBuckets
-    * slice of the index. */
-  val MaxBroadcastKeys: Long = 4000000L
+    * keys are ~its token count (8 B longs in digest mode → the default
+    * ~32 MB); a bigger shard probes bucket by bucket
+    * ([[ShardTiers.MaxBroadcastKeys]]). */
+  val MaxBroadcastKeys: Long = ShardTiers.MaxBroadcastKeys
 
   /** Prior occurrences (all shards except `shardId`) of the named
     * shard's keys — the probe core shared by [[addShard]] and
-    * [[retractionsForShard]]. Keys come from the shard's OWN stored
-    * partition (narrow pruned scan), never from re-tokenizing text.
-    *
-    * Under the gate: one broadcast semi-join, lazily composed (no
-    * materialization). Past it: sequential per-bucket legs, each
-    * confined by partition pruning to one `__bkt` subdirectory on both
-    * sides, each broadcasting at most [[MaxBroadcastKeys]] keys —
-    * memory is strictly leg-bounded (never all buckets' broadcasts at
-    * once, which is why the legs are a driver loop and not one unioned
-    * plan), and each leg appends its touched rows to a temp dir under
-    * the root that the CALLER deletes once its consumer has
-    * materialized. The per-bucket key counts ride one collect of at
-    * most nBuckets metadata rows — never data. */
+    * [[retractionsForShard]], run by [[ShardTiers.probe]]. Keys come
+    * from the shard's OWN stored partition (narrow pruned scan), never
+    * from re-tokenizing text. Past the gate the touched rows land in a
+    * temp dir under the root that the CALLER deletes once its consumer
+    * has materialized. */
   private def touchedPrior(spark: SparkSession, root: String, p: Params,
       shardId: String, maxBroadcastKeys: Long,
       tmpName: String): (DataFrame, Option[String]) = {
     val all = windowsRaw(spark, root, p)
-    val shardW = all.filter(col("ingest_shard") === lit(shardId))
-    val prior = all.filter(col("ingest_shard") =!= lit(shardId))
-    val bucketCounts = shardW.select(col("__bkt"), col("__gk")).distinct()
-      .groupBy(col("__bkt")).agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq.sortBy(_._1)
-    val totalKeys = bucketCounts.map(_._2).sum
-    if (totalKeys <= maxBroadcastKeys) {
-      val keys = shardW.select(col("__gk")).distinct()
-      (prior.select(col("__gk"), col("id"), col("pos"))
-        .join(broadcast(keys), Seq("__gk"), "left_semi"), None)
-    } else {
-      val tmp = s"$root/$tmpName"
-      val fs = new org.apache.hadoop.fs.Path(tmp)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      // no seed write: the first leg's append creates the dir (at least
-      // one bucket exists whenever this branch runs — totalKeys > gate),
-      // and the explicit-schema read below is empty-safe even if every
-      // leg appended zero rows
-      graft.bench.StageTimers.time("exsubstore.probe_legs") {
-        bucketCounts.foreach { case (b, nKeys) =>
-          val keysB = shardW.filter(col("__bkt") === lit(b))
-            .select(col("__gk")).distinct()
-          val gated = if (nKeys <= maxBroadcastKeys) broadcast(keysB)
-            else keysB // single over-gate bucket: shuffle of 1/nBuckets
-          prior.filter(col("__bkt") === lit(b))
-            .select(col("__gk"), col("id"), col("pos"))
-            .join(gated, Seq("__gk"), "left_semi")
-            .write.mode("append").parquet(tmp)
-        }
-      }
-      (spark.read.schema(StructType(windowsSchema(p).take(3))).parquet(tmp),
-        Some(tmp))
-    }
+    val keys = all.filter(col("ingest_shard") === lit(shardId))
+      .select(col("__gk"), col("__bkt")).distinct()
+    val counts = ShardTiers.bucketCounts(keys)
+    ShardTiers.probe(root, tmpName, "exsubstore.probe_legs",
+      all.filter(col("ingest_shard") =!= lit(shardId))
+        .select(col("__gk"), col("id"), col("pos"), col("__bkt")),
+      keys, "__gk", counts.map(_._2).sum, maxBroadcastKeys)(counts)
   }
 
   /** Ingest one shard WITHOUT re-scanning the corpus. Order of
@@ -333,11 +290,7 @@ object ExactSubstrStore {
       report.write.mode("overwrite").parquet(dir)
     }
     // the report is on disk; the jumbo probe's temp has no consumer left
-    probeTmp.foreach { t =>
-      new org.apache.hadoop.fs.Path(t)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(t), true)
-    }
+    ShardTiers.dropTemp(spark, probeTmp)
     spark.read.schema(reportSchema).parquet(dir)
   }
 
@@ -405,78 +358,23 @@ object ExactSubstrStore {
       .distinct()
   }
 
-  /** Consolidate accumulated per-shard partitions of `windows/` — the
-    * file-count hygiene a continuously-ingesting store needs (daily
-    * shards for a year = 365 partition dirs whose listing and footer
-    * reads tax every probe), now SIZE-TIERED: only shards whose
-    * partition is at most `tierMaxBytes` are absorbed, so a mature
-    * store compacts its tail of small daily shards into a tier WITHOUT
-    * rewriting the accumulated base every time (the default ∞ keeps
-    * the original compact-everything behavior). The [[IncrementalDedup
-    * .compactShards]] protocol, sharpened twice for this store:
-    *
-    *  - duplicated window rows INFLATE counts (a unique span would read
-    *    as duplicated), so the consolidation dedups on the full
-    *    (gk, id, pos) row — a compact-everything re-run after any crash
-    *    absorbs and repairs leftovers;
-    *  - the consolidated partition's name is DETERMINISTIC on the
-    *    absorbed source set, so a re-run after the crash window
-    *    (rename done, source deletion incomplete) DETECTS the completed
-    *    rename — target partition already present — and just finishes
-    *    deleting the sources instead of double-counting them. This is
-    *    what makes the tiered mode crash-safe: the leftover sources and
-    *    the new tier never need to be re-read together.
-    *
-    * Cross-tier duplicate rows (possible only through interference no
-    * single-writer history produces) are repaired by a compact-
-    * everything run, not a tiered one — tiered legs read only their
-    * sources. Only compact shards whose ingest has COMPLETED: the
-    * consolidated partition no longer matches their shard id, so a
-    * later [[addShard]] replay under an absorbed id would count its
-    * windows twice (and a post-compaction [[retractionsForShard]] for
-    * an absorbed id reads an empty partition — same contract as v1).
-    * Single writer, same as ingest. The bucket subdirectories are
-    * preserved (`__bkt` rides the read and the staged write), so
-    * probe pruning is unaffected. Returns (partitions before,
-    * partitions after). */
+  /** Size-tiered compaction of `windows/` under the [[ShardTiers]]
+    * protocol — the file-count hygiene a continuously-ingesting store
+    * needs (daily shards for a year = 365 partition dirs whose listing
+    * and footer reads tax every probe). Consolidation rule: duplicated
+    * window rows INFLATE counts (a unique span would read as
+    * duplicated), so the tier dedups on the full (gk, id, pos) row, and
+    * a compact-everything run repairs any leftover; bucket dirs are
+    * kept, so probe pruning is unaffected. Compaction ends the absorbed
+    * shards' replay window: a later [[addShard]] replay under an
+    * absorbed id would count its windows twice, and a post-compaction
+    * [[retractionsForShard]] for it reads an empty partition. Returns
+    * (partitions before, partitions after). */
   def compactShards(spark: SparkSession, root: String,
-      tierMaxBytes: Long = Long.MaxValue): (Int, Int) = {
-    val p = readMeta(spark, root)
-    val path = windowsPath(root)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(dir)) return (0, 0)
-    def listShards(): Seq[String] = fs.listStatus(dir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("ingest_shard="))
-      .map(_.getPath.getName.stripPrefix("ingest_shard="))
-    val before = listShards()
-    val sources = before.filter { s =>
-      fs.getContentSummary(
-        new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$s")).getLength <=
-        tierMaxBytes
-    }
-    if (sources.size <= 1) return (before.size, before.size)
-    val newId = "compacted_" + java.lang.Long.toHexString(
-      sources.sorted.map(s => s.hashCode.toLong).sum & Long.MaxValue)
-    val target = new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$newId")
-    if (!fs.exists(target)) {
-      val stage = new org.apache.hadoop.fs.Path(path + "__compact_stage")
-      fs.delete(stage, true) // leftover from a crashed attempt
-      windowsRaw(spark, root, p)
-        .filter(col("ingest_shard").isin(sources: _*))
-        .drop("ingest_shard")
-        .dropDuplicates("__gk", "id", "pos")
-        .write.mode("overwrite").partitionBy("__bkt").parquet(stage.toString)
-      require(fs.rename(stage, target), s"compact promote failed: $stage")
-    } // else: a prior run crashed between rename and source deletion —
-      // the deterministic name proves the target holds exactly these
-      // sources' rows; just finish the deletion
-    sources.foreach { s =>
-      fs.delete(new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$s"), true)
-    }
-    (before.size, listShards().size)
-  }
+      tierMaxBytes: Long = Long.MaxValue): (Int, Int) =
+    ShardTiers.compact(spark, tierMaxBytes, ShardTiers.Table(
+      windowsPath(root), windowsSchema(readMeta(spark, root)),
+      _.dropDuplicates("__gk", "id", "pos"), Seq("__bkt")))
 
   /** The batch operator's coverage stage over an externally supplied
     * window/dup-state pair: (id, p, protected) for every position of

@@ -163,7 +163,7 @@ object IncrementalDedup {
       lit(p.bands).as("bands"), lit(p.threshold).as("threshold"),
       lit(p.maxBucket).as("max_bucket"))
       .write.mode("overwrite").parquet(metaPath(root))
-    StoreMeta.put("incdedup", root, p)
+    StoreMeta.put(spark, "incdedup", metaPath(root), p)
   }
 
   /** The parameters this index was built with (probes must match them;
@@ -171,7 +171,7 @@ object IncrementalDedup {
     * builds, so the per-call parquet read was one pure-overhead Spark
     * execution per ingest). */
   def readMeta(spark: SparkSession, root: String): Params =
-    StoreMeta.cached("incdedup", root) {
+    StoreMeta.cached(spark, "incdedup", metaPath(root)) {
       val r = spark.read.parquet(metaPath(root)).head()
       Params(r.getAs[Int]("shingle_w"), r.getAs[Int]("k"),
         r.getAs[Int]("bands"), r.getAs[Double]("threshold"),
@@ -375,11 +375,7 @@ object IncrementalDedup {
       .filter(col("jaccard") >= p.threshold)
       .select(col("id_a"), col("id_b"))
     val raw = readRawLabels(spark, root, excludeShard = Some(shardId))
-    val labelBytes = {
-      val lp = new org.apache.hadoop.fs.Path(labelsPath(root))
-      val lfs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (lfs.exists(lp)) lfs.getContentSummary(lp).getLength else 0L
-    }
+    val labelBytes = ShardTiers.bytes(spark, labelsPath(root))
     // hard row cap for the fast path, enforced on the ACTUAL collected
     // count (the byte gate sees compressed parquet, and delta/RLE-encoded
     // sorted longs can decode far past it): limit(cap + 1) costs nothing
@@ -563,20 +559,9 @@ object IncrementalDedup {
     * would see no published-label rows, fall back to `old_cluster = id`,
     * and silently emit a spurious retraction for every non-root published
     * doc. One driver-side directory listing per table, no data read. */
-  private def liveShardIds(spark: SparkSession, root: String): Set[String] = {
-    def list(path: String): Set[String] = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) Set.empty
-      else fs.listStatus(p).iterator
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("ingest_shard="))
-        .map(_.getPath.getName.stripPrefix("ingest_shard="))
-        .toSet
-    }
-    list(bucketsPath(root)) ++ list(shinglesPath(root)) ++
-      list(labelsPath(root))
-  }
+  private def liveShardIds(spark: SparkSession, root: String): Set[String] =
+    Seq(bucketsPath(root), shinglesPath(root), labelsPath(root))
+      .flatMap(ShardTiers.shards(spark, _)).toSet
 
   /** Fail fast when a retraction feed names shards [[compactShards]] has
     * already collapsed (the feed's answer is unreconstructable then — the
@@ -674,102 +659,34 @@ object IncrementalDedup {
       .filter(col("old_cluster") =!= col("new_cluster"))
   }
 
-  /** Index maintenance: consolidate all ingested shard partitions into ONE
-    * — after thousands of small-shard ingests the per-shard directories
-    * are exactly the small-files problem q51's compaction solves for data
-    * tables (every probe lists and opens per-shard files). Protocol:
-    * write the consolidated partition FIRST (its own fresh shard id, a
-    * dynamic overwrite touching nothing else), then delete the source
-    * shard directories. CRASH SAFETY BY DUPLICATE TOLERANCE, not
-    * atomicity: a death between the write and the deletes leaves some
-    * rows present twice (old shard dir + consolidated dir), and every
-    * read path is insensitive to that — candidate pairs are
-    * `.distinct()`ed, [[Dedup.resolveClusters]] is multiplicity-blind,
-    * and duplicated shingle rows only duplicate verify pairs the same
-    * distinct/resolve steps absorb — and on top of that the consolidated
-    * rewrite DEDUPLICATES rows (exact-key for buckets/shingles, min-root
-    * aggregation for labels), so a re-compaction after a crash restores
-    * EXACT state instead of carrying the doubled rows forever (doubled
-    * bucket rows would inflate [[crossProbe]]'s per-bucket sizes and
-    * could push a genuinely small bucket over `maxBucket` into the
-    * star-link degradation). The label table compacts to its CURRENT
-    * star rows — run [[republishDelta]] for any pending publication
-    * point first, since compaction collapses the per-shard history it
-    * diffs (a feed naming a collapsed shard fails fast via the
-    * shard-existence check instead of emitting a spurious delta).
-    * Re-running compactShards after a crash converges (the
-    * consolidated id is derived from the surviving source dirs, and a
-    * leftover consolidated dir from the crashed attempt is itself a
-    * source).
-    *
-    * SIZE-TIERED since r16 (`tierMaxBytes`, default ∞ = the original
-    * compact-everything): only shards at or under the tier merge, so a
-    * mature store consolidates its small-shard tail without rewriting
-    * the accumulated base every time. Each table's consolidation rule
-    * is associative (exact-row dedup; min-fold for labels), so folding
-    * a tier early leaves every read's outer fold exact. Tiering changes
-    * the crash story in ONE case: a leftover consolidated dir ABOVE the
-    * tier is no longer a source, so absorb-by-rederivation cannot fire
-    * — instead the deterministic name DETECTS the completed rename
-    * (target partition already present) and the re-run just finishes
-    * deleting the sources, never re-reading them next to their absorbed
-    * copy. Returns (shard dirs before, after) per table
-    * (buckets, shingles, labels), for monitoring. */
+  /** Index maintenance: size-tiered compaction of the three tables, each
+    * under the [[ShardTiers]] protocol — after thousands of small-shard
+    * ingests the per-shard directories are exactly the small-files
+    * problem q51's compaction solves for data tables (every probe lists
+    * and opens per-shard files). Every read path is insensitive to
+    * crash-leftover duplicate rows — candidate pairs are `.distinct()`ed,
+    * [[Dedup.resolveClusters]] is multiplicity-blind, and duplicated
+    * shingle rows only duplicate verify pairs the same distinct/resolve
+    * steps absorb — and each consolidation rule also dedups, so a
+    * re-compaction restores EXACT state (doubled bucket rows would
+    * inflate [[crossProbe]]'s per-bucket sizes and could push a small
+    * bucket over `maxBucket` into the star-link degradation). Rules:
+    * exact-key dedup for buckets and shingles; labels fold to their
+    * CURRENT star rows by min-root — run [[republishDelta]] for any
+    * pending publication point first, since compaction collapses the
+    * per-shard history it diffs (a feed naming a collapsed shard fails
+    * fast via the shard-existence check instead of emitting a spurious
+    * delta). Returns (shard dirs before, after) per table (buckets,
+    * shingles, labels), for monitoring. */
   def compactShards(spark: SparkSession, root: String,
       tierMaxBytes: Long = Long.MaxValue)
       : ((Int, Int), (Int, Int), (Int, Int)) = {
-    def compactOne(path: String, schema: StructType,
-        consolidate: DataFrame => DataFrame): (Int, Int) = {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val dir = new org.apache.hadoop.fs.Path(path)
-      if (!fs.exists(dir)) return (0, 0)
-      def listShards(): Seq[String] = fs.listStatus(dir).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("ingest_shard="))
-        .map(_.getPath.getName.stripPrefix("ingest_shard="))
-      val before = listShards()
-      val sources = before.filter { s =>
-        fs.getContentSummary(new org.apache.hadoop.fs.Path(dir,
-          s"ingest_shard=$s")).getLength <= tierMaxBytes
-      }
-      if (sources.size <= 1) return (before.size, before.size)
-      // deterministic fresh id from the source set: re-running after a
-      // crash (old dirs partially deleted, previous consolidated dir now a
-      // source) derives a NEW id, so every leftover is absorbed — and in
-      // tiered mode, where an above-tier leftover CAN'T be a source, the
-      // unchanged source set re-derives the SAME id, which is the crash
-      // detector (see below)
-      val newId = "compacted_" + java.lang.Long.toHexString(
-        sources.sorted.map(s => s.hashCode.toLong).sum & Long.MaxValue)
-      val target = new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$newId")
-      if (!fs.exists(target)) {
-        // stage as a SIBLING dir (a stray subdir under the partitioned root
-        // would break partition discovery), then rename in as the new
-        // partition directory — Spark refuses to overwrite a path it is
-        // reading, and the rename keeps every crash point duplicate-or-
-        // nothing. Data files carry no ingest_shard column; the partition
-        // value comes from the directory name, exactly as the normal writes
-        val stage = new org.apache.hadoop.fs.Path(path + "__compact_stage")
-        fs.delete(stage, true) // leftover from a crashed attempt
-        consolidate(spark.read.schema(schema).parquet(path)
-            .filter(col("ingest_shard").isin(sources: _*))
-            .drop("ingest_shard"))
-          .write.mode("overwrite").parquet(stage.toString)
-        require(fs.rename(stage, target), s"compact promote failed: $stage")
-      } // else: a prior run crashed between rename and source deletion —
-        // the deterministic name proves the target already holds exactly
-        // these sources' rows; just finish the deletion
-      sources.foreach { s =>
-        fs.delete(new org.apache.hadoop.fs.Path(dir,
-          s"ingest_shard=$s"), true)
-      }
-      (before.size, listShards().size)
-    }
-    (compactOne(bucketsPath(root), bucketsSchema,
-        _.dropDuplicates("id", "band", "bucket")),
-      compactOne(shinglesPath(root), shinglesSchema,
-        _.dropDuplicates("id")),
-      compactOne(labelsPath(root), labelsSchema,
-        _.groupBy(col("id")).agg(min(col("cluster_id")).as("cluster_id"))))
+    def tier(t: ShardTiers.Table) = ShardTiers.compact(spark, tierMaxBytes, t)
+    (tier(ShardTiers.Table(bucketsPath(root), bucketsSchema,
+        _.dropDuplicates("id", "band", "bucket"))),
+      tier(ShardTiers.Table(shinglesPath(root), shinglesSchema,
+        _.dropDuplicates("id"))),
+      tier(ShardTiers.Table(labelsPath(root), labelsSchema,
+        _.groupBy(col("id")).agg(min(col("cluster_id")).as("cluster_id")))))
   }
 }

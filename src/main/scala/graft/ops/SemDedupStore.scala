@@ -84,8 +84,8 @@ object SemDedupStore {
       .coalesce(1).write.mode("overwrite").parquet(centroidsPath(root))
     spark.range(1).select(lit(threshold).as("threshold"))
       .write.mode("overwrite").parquet(metaPath(root))
-    StoreMeta.put("semdedup.meta", root, threshold)
-    StoreMeta.put("semdedup.cents", root, cents)
+    StoreMeta.put(spark, "semdedup.meta", metaPath(root), threshold)
+    StoreMeta.put(spark, "semdedup.cents", centroidsPath(root), cents)
     ingest(spark, root, emb, idCol, vecCol, shardId, cents, threshold,
       maxClusterSize)
   }
@@ -93,7 +93,7 @@ object SemDedupStore {
   /** The threshold this store was built with (memoized per root —
     * [[StoreMeta]]: immutable between builds). */
   def readMeta(spark: SparkSession, root: String): Double =
-    StoreMeta.cached("semdedup.meta", root) {
+    StoreMeta.cached(spark, "semdedup.meta", metaPath(root)) {
       spark.read.parquet(metaPath(root)).head().getAs[Double]("threshold")
     }
 
@@ -108,7 +108,8 @@ object SemDedupStore {
       idCol: String, vecCol: String, shardId: String,
       maxClusterSize: Long = 0L): DataFrame = {
     val threshold = readMeta(spark, root)
-    val cents = StoreMeta.cached("semdedup.cents", root) {
+    val cents = StoreMeta.cached(spark, "semdedup.cents",
+        centroidsPath(root)) {
       Dedup.collectCentroids(
         spark.read.parquet(centroidsPath(root)), "cid", "cv")
     }
@@ -207,11 +208,8 @@ object SemDedupStore {
     * write, which is exactly ingest's shape). */
   private def readShardTable(spark: SparkSession, path: String,
       schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasParts = fs.exists(p) && fs.listStatus(p).exists(st =>
-      st.isDirectory && st.getPath.getName.startsWith("ingest_shard="))
-    if (hasParts) spark.read.schema(schema).parquet(path)
+    if (ShardTiers.shards(spark, path).nonEmpty)
+      spark.read.schema(schema).parquet(path)
     else spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
   }
@@ -238,79 +236,31 @@ object SemDedupStore {
         (coalesce(col("__rem"), lit(false)) === false).as("kept"))
   }
 
-  /** Consolidate accumulated per-shard partitions of `assign/` and
-    * `flags/` — the compaction this store was missing (its siblings
-    * [[IncrementalDedup.compactShards]] / [[ExactSubstrStore
-    * .compactShards]] had it): a year of daily shards is 365 partition
+  /** Size-tiered compaction of `assign/` and `flags/`, each under the
+    * [[ShardTiers]] protocol (a year of daily shards is 365 partition
     * dirs per table whose listing and footer reads tax every ingest's
-    * prior-state scan. SIZE-TIERED like the ExactSubstr store's
-    * (`tierMaxBytes`; the default ∞ compacts everything): only shards
-    * at or under the tier merge, so the accumulated base is never
-    * rewritten just to absorb the small-shard tail.
-    *
-    * Per-table consolidation rules, chosen by each table's algebra:
+    * prior-state scan). Consolidation rules, chosen by each table's
+    * algebra:
     *  - `assign/` rows are unique per id (global-id caller contract), so
-    *    consolidation dedups on id — NOT duplicate-tolerant reads:
+    *    the tier dedups on id — NOT duplicate-tolerant reads:
     *    [[currentState]] would emit one row per copy — and re-sorts by
     *    cluster_id to keep the row-group pruning the ingest layout
     *    promises.
     *  - `flags/` is a monotone delta log folded by groupBy(id).max, so
-    *    consolidation PRE-FOLDS its sources to one row per touched id;
+    *    the tier PRE-FOLDS its sources to one row per touched id;
     *    associativity keeps the outer fold exact with later deltas.
     *
-    * Crash protocol = the ExactSubstr store's, because assign is not
-    * duplicate-tolerant: stage to a sibling dir, rename in as a
-    * DETERMINISTIC partition name derived from the source set, then
-    * delete sources — a re-run after the rename-done crash window finds
-    * the target partition already present and just finishes the
-    * deletion (never re-reads sources next to their absorbed copy).
-    *
-    * Compaction ends the absorbed shards' replay window (their rows no
-    * longer live under the per-shard partitions a replay's dynamic
-    * overwrite targets, and the in-flight exclusion prunes by partition
-    * name) — only compact shards whose ingest has COMPLETED, and for
-    * [[graft.streaming.EventStreams.semDedupSink]] only while the query
-    * is stopped with its checkpoint committed. Single writer, same as
-    * ingest. Returns ((assign before, after), (flags before, after)). */
+    * Compaction ends the absorbed shards' replay window — for
+    * [[graft.streaming.EventStreams.semDedupSink]] compact only while
+    * the query is stopped with its checkpoint committed. Returns
+    * ((assign before, after), (flags before, after)). */
   def compactShards(spark: SparkSession, root: String,
       tierMaxBytes: Long = Long.MaxValue): ((Int, Int), (Int, Int)) = {
-    def compactOne(path: String, schema: StructType,
-        consolidate: DataFrame => DataFrame): (Int, Int) = {
-      val dir = new org.apache.hadoop.fs.Path(path)
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(dir)) return (0, 0)
-      def listShards(): Seq[String] = fs.listStatus(dir).toSeq
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("ingest_shard="))
-        .map(_.getPath.getName.stripPrefix("ingest_shard="))
-      val before = listShards()
-      val sources = before.filter { s =>
-        fs.getContentSummary(new org.apache.hadoop.fs.Path(dir,
-          s"ingest_shard=$s")).getLength <= tierMaxBytes
-      }
-      if (sources.size <= 1) return (before.size, before.size)
-      val newId = "compacted_" + java.lang.Long.toHexString(
-        sources.sorted.map(s => s.hashCode.toLong).sum & Long.MaxValue)
-      val target = new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$newId")
-      if (!fs.exists(target)) {
-        val stage = new org.apache.hadoop.fs.Path(path + "__compact_stage")
-        fs.delete(stage, true) // leftover from a crashed attempt
-        consolidate(spark.read.schema(schema).parquet(path)
-            .filter(col("ingest_shard").isin(sources: _*))
-            .drop("ingest_shard"))
-          .write.mode("overwrite").parquet(stage.toString)
-        require(fs.rename(stage, target), s"compact promote failed: $stage")
-      } // else: rename-done crash window — finish the source deletion
-      sources.foreach { s =>
-        fs.delete(new org.apache.hadoop.fs.Path(dir, s"ingest_shard=$s"),
-          true)
-      }
-      (before.size, listShards().size)
-    }
-    (compactOne(assignPath(root), assignSchema,
-        _.dropDuplicates("id").sortWithinPartitions(col("cluster_id"))),
-      compactOne(flagsPath(root), flagsSchema,
+    def tier(t: ShardTiers.Table) = ShardTiers.compact(spark, tierMaxBytes, t)
+    (tier(ShardTiers.Table(assignPath(root), assignSchema,
+        _.dropDuplicates("id").sortWithinPartitions(col("cluster_id")))),
+      tier(ShardTiers.Table(flagsPath(root), flagsSchema,
         _.groupBy(col("id")).agg(max(col("dup")).as("dup"),
-          max(col("removed")).as("removed"))))
+          max(col("removed")).as("removed")))))
   }
 }

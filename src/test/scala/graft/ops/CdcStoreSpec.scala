@@ -183,6 +183,65 @@ class CdcStoreSpec extends SparkSpec {
     assert(CdcStore.currentDigests(spark, root).collect().toSet == stateBefore)
   }
 
+  test("tiered re-compaction of batch-id shards {2,3} after {1,4} loses no digests") {
+    // streaming sinks name shards by batch id; a tier name derived from
+    // the sum of the ids' hash codes gave {1,4} and {2,3} the same name,
+    // and the second pass took it for a finished crash and deleted 2, 3
+    val p = CdcStore.Params(family = "gear", maskBits = 4, minLen = 12,
+      maxLen = 48, nBuckets = 2)
+    val root = tmpRoot("batchids")
+    def corpus(idBase: Long, n: Int): DataFrame =
+      (0 until n).map(i => (idBase + i, text(12, (idBase + i).toInt)))
+        .toDF("doc_id", "text")
+    CdcStore.build(corpus(0, 500), "doc_id", "text", root, p)
+    for (s <- Seq(1, 4))
+      CdcStore.addShard(spark, root, corpus(s * 1000L, 200), "doc_id",
+        "text", s.toString)
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def sizeOf(s: String): Long = fs.getContentSummary(
+      new org.apache.hadoop.fs.Path(s"$root/digests/ingest_shard=$s"))
+      .getLength
+    val tier = math.max(sizeOf("1"), sizeOf("4")) * 6 / 5
+    require(sizeOf("base") > tier, "fixture: base must sit above the tier")
+    assert(CdcStore.compactShards(spark, root, tier) == ((3, 2)))
+    val tier14 = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/digests"))
+      .map(_.getPath.getName.stripPrefix("ingest_shard="))
+      .filter(_.startsWith("compacted_")).head
+    require(sizeOf(tier14) > tier,
+      "fixture: the {1,4} tier must sit above the tier")
+    for (s <- Seq(2, 3))
+      CdcStore.addShard(spark, root, corpus(s * 1000L, 200), "doc_id",
+        "text", s.toString)
+    require(Seq("2", "3").forall(sizeOf(_) <= tier),
+      "fixture: the new shards must sit under the tier")
+    val before = CdcStore.currentDigests(spark, root).collect().toSet
+    assert(CdcStore.compactShards(spark, root, tier) == ((4, 3)),
+      "2 + 3 fold into a second tier next to the first")
+    assert(CdcStore.currentDigests(spark, root).collect().toSet == before,
+      "no digest of shards 2 and 3 is lost")
+  }
+
+  test("readMeta sees a meta/ rewritten out of band") {
+    val p1 = CdcStore.Params(family = "gear", nBuckets = 4)
+    val p2 = CdcStore.Params(family = "md5", k = 12, divisor = 8,
+      nBuckets = 8)
+    val root = tmpRoot("fresh")
+    val other = tmpRoot("fresh_other")
+    CdcStore.build(docs(1L -> text(30, 1)), "doc_id", "text", root, p1)
+    CdcStore.build(docs(1L -> text(30, 1)), "doc_id", "text", other, p2)
+    assert(CdcStore.readMeta(spark, root) == p1)
+    // replace root's meta/ with another store's, bypassing the build path
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val meta = new org.apache.hadoop.fs.Path(s"$root/meta")
+    fs.delete(meta, true)
+    org.apache.hadoop.fs.FileUtil.copy(fs,
+      new org.apache.hadoop.fs.Path(s"$other/meta"), fs, meta, false,
+      spark.sparkContext.hadoopConfiguration)
+    assert(CdcStore.readMeta(spark, root) == p2)
+  }
+
   test("meta round-trips and probes refuse a missing store") {
     val p = CdcStore.Params(family = "md5", k = 12, divisor = 8,
       minLen = 10, maxLen = 50, nBuckets = 4)
