@@ -51,7 +51,7 @@ object GraftSession {
     // expands the shared plan DAG into a tree, so join branches reusing
     // an upstream cached frame multiply the rendered size per lineage
     // level — dies with `OutOfMemoryError: UTF16 String size is ...`
-    // before truncation ever engages (the 10M-doc CorpusBuildSmoke hit
+    // before truncation ever engages (the 10M-doc `Smoke corpus` run hit
     // exactly this at its 7th chained persist, BASELINE.md r11). Plan
     // strings are diagnostics; 1M chars is plenty, and the cap also
     // bounds the RENDER COST itself, which grows multiplicatively with

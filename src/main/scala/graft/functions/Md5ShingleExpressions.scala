@@ -5,7 +5,6 @@ import java.security.MessageDigest
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -38,9 +37,7 @@ import org.apache.spark.sql.graftbridge.Bridge
   * dedup stays on the xxhash64 family ([[ShingleHashes]] +
   * [[MinHashSigs]]: no string materialization at all); this family is
   * the ORACLE-CHECKABLE surface, and the two are pinned to recover the
-  * same planted near-duplicate pairs by spec. CodegenFallback for the
-  * same reason as [[ShingleHashes]]: per-row overhead once, the row's
-  * work is already a tight loop.
+  * same planted near-duplicate pairs by spec.
   */
 private[graft] object Md5Family {
 
@@ -181,10 +178,11 @@ case class Md5MinHashSigs(child: Expression, k: Int)
     val md = Md5Family.md5()
     val out = new Array[Long](k)
     // "j:" + decimal digits of the hash, written straight into one
-    // reused ASCII buffer (max prefix "63:" + max 19 digits) — the
-    // string-concat spelling allocated two Strings + an encode per
-    // (j, distinct-hash) digest in this n*k inner loop
-    val buf = new Array[Byte](24)
+    // reused ASCII buffer sized for the widest case (an 11-byte
+    // "<int>:" prefix + a 20-byte negative long) — the string-concat
+    // spelling allocated two Strings + an encode per (j, distinct-hash)
+    // digest in this n*k inner loop
+    val buf = new Array[Byte](32)
     var j = 0
     while (j < k) {
       val pEnd0 = Md5Family.appendDigits(buf, 0, j.toLong)
@@ -334,9 +332,7 @@ case class Md5NgramBuckets(child: Expression, buckets: Int, bigrams: Boolean)
   * on both engines. First-occurrence order, exact `array_distinct`
   * set semantics; gram arrays are containsNull=false by their native
   * producers ([[WordGramExpressions]]), so the null-element leg of
-  * the replaced lambda chain is unreachable and not replicated.
-  * CodegenFallback: per-row overhead once, the row's work is a tight
-  * loop. */
+  * the replaced lambda chain is unreachable and not replicated. */
 case class Md5PairKeys(child: Expression)
     extends UnaryExpression with NativeLoopCodegen {
 
@@ -386,11 +382,7 @@ case class Md5PairKeys(child: Expression)
   * interpreted digest-to-hex-to-parse chains per token occurrence
   * (build) and per probe (estimate). Bucket i = (top 32 bits of
   * md5(utf8("cms<i>_" + tok)), i.e. the first-8-hex-digit prefix) mod
-  * width. CodegenFallback: per-row overhead once, the row's work is a
-  * tight loop. */
-// NativeLoopCodegen (r17): keeps the hosting projection inside its
-// whole-stage span (see the trait scaladoc); the CodegenFallback
-// span-break rationale above is superseded by the measured A/B.
+  * width. */
 case class Md5CmsBuckets(child: Expression, depth: Int, width: Int)
     extends UnaryExpression with NativeLoopCodegen {
 
@@ -445,8 +437,7 @@ case class Md5CmsBuckets(child: Expression, depth: Int, width: Int)
   * first 1-bit in the low w = 32-p bits (w+1 when all zero) —
   * computed with numberOfLeadingZeros instead of the ladder, same
   * exact integer semantics. The column spellings stay as the
-  * oracle/spec reference (the hashedNgramBucketsHof convention).
-  * CodegenFallback: per-row overhead once. */
+  * oracle/spec reference (the hashedNgramBucketsHof convention). */
 case class Md5HllRegister(child: Expression, p: Int)
     extends UnaryExpression with NativeLoopCodegen {
 

@@ -83,6 +83,7 @@ case class TokenSplice(left: Expression, right: Expression)
       ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
       : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
     import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
     val l = left.genCode(ctx)
     val r = right.genCode(ctx)
     val ad = "org.apache.spark.sql.catalyst.util.ArrayData"
@@ -100,7 +101,7 @@ case class TokenSplice(left: Expression, right: Expression)
       ev.copy(code = code"""
         ${l.code}
         ${r.code}
-        $u8 ${ev.value} = $call;""")
+        $u8 ${ev.value} = $call;""", isNull = FalseLiteral)
     }
   }
 

@@ -149,7 +149,7 @@ case class DotProduct(left: Expression, right: Expression)
   * Why this exists: the unrolled literal formulation (one
   * [[CosineSimilarity]] + struct per centroid inside `array_max`) grows
   * linearly in generated code and blows Janino's 64 KB method limit at
-  * nc=256 (found by `tools/CorpusBuildSmoke`) — whole-stage codegen then
+  * nc=256 (found by `Smoke corpus`) — whole-stage codegen then
   * aborts and EVERY row pays interpreted eval. A runtime loop is constant
   * code size at any nc, keeps the assign stage map-only (no join, no
   * shuffle), and codegens at the paper-scale tens-of-thousands of

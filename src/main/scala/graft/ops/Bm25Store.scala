@@ -171,35 +171,24 @@ object Bm25Store {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val obsPost = new org.apache.spark.sql.Observation()
-      td.select(col("id"), size(col("__t")).cast("long").as("__dl"),
+      val posts = td
+        .select(col("id"), size(col("__t")).cast("long").as("__dl"),
           explode(col("__t")).as("term"))
         .groupBy(col("id"), col("term"))
         .agg(count(lit(1)).as("tf"), max(col("__dl")).as("dl"))
         .observe(obsPost, count(lit(1)).as("n"))
-        .withColumn("ingest_shard", lit(shardId))
-        .withColumn("__bkt", bucketOf(p.nBuckets))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_shard", "__bkt")
-        .parquet(postingsPath(root))
+      ShardTiers.writeShard(posts, postingsPath(root), shardId,
+        Some(bucketOf(p.nBuckets)))
       val obsTerms = new org.apache.spark.sql.Observation()
-      postingsRaw(spark, root)
+      val terms = postingsRaw(spark, root)
         .filter(col("ingest_shard") === lit(shardId))
         .select(col("term"), col("__bkt")).distinct()
         .observe(obsTerms, count(lit(1)).as("n"))
-        .withColumn("ingest_shard", lit(shardId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_shard", "__bkt")
-        .parquet(termsPath(root))
-      td.agg(count(lit(1)).as("n_docs"),
+      ShardTiers.writeShard(terms, termsPath(root), shardId,
+        Some(col("__bkt")))
+      ShardTiers.writeShard(td.agg(count(lit(1)).as("n_docs"),
           coalesce(sum(size(col("__t")).cast("long")), lit(0L))
-            .as("sum_dl"))
-        .withColumn("ingest_shard", lit(shardId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_shard")
-        .parquet(statsPath(root))
+            .as("sum_dl")), statsPath(root), shardId, None)
       (obsPost.get("n").asInstanceOf[Long],
         obsTerms.get("n").asInstanceOf[Long])
     } finally td.unpersist(false)

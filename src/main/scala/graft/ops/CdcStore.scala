@@ -129,13 +129,9 @@ object CdcStore {
     * the shard-sized exchange; the bucket column is map-side. */
   private def writeShardDigests(chunks: DataFrame, path: String,
       shardId: String, p: Params): Unit =
-    chunks.filter(col("len") >= p.minLen).select(col("digest")).distinct()
-      .withColumn("ingest_shard", lit(shardId))
-      .withColumn("__bkt", bucketOf(p))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_shard", "__bkt")
-      .parquet(path)
+    ShardTiers.writeShard(
+      chunks.filter(col("len") >= p.minLen).select(col("digest")).distinct(),
+      path, shardId, Some(bucketOf(p)))
 
   private def digestsRaw(spark: SparkSession, root: String,
       p: Params): DataFrame =

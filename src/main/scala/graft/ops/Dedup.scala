@@ -599,7 +599,7 @@ object Dedup {
     // sf0.01 vs 2.1s at sf0.1 — a 10x data change moves it ~20%. The
     // data-proportional part is ~0.4s; the rest is local-mode fixed
     // overhead that amortizes away on a real cluster/bigger inputs
-    // (the 200k-doc DedupScaleSmoke's per-doc cost keeps falling).
+    // (the 200k-doc `Smoke dedup` run's per-doc cost keeps falling).
     val edges = graft.bench.StageTimers.time("resolveClusters.pairs_edges") {
       ckpt(p.select(col(idA).as("src"), col(idB).as("dst"))
         .unionByName(p.select(col(idB).as("src"), col(idA).as("dst"))))
@@ -816,7 +816,7 @@ object Dedup {
     * refuses with the mitigation named — re-train with more centroids
     * (Abbas et al. run k in the tens of thousands at LAION scale) or
     * shard the hot cluster upstream. Measured on the adversarial fixture
-    * ([[graft.tools.AnnScaleSmoke]], quiet host): 10k vectors collapsed
+    * ([[graft.tools.Smoke]] `ann`, quiet host): 10k vectors collapsed
     * into ONE cluster = 5.0e7 pairwise rows, 13.5s at 64 dims — DOUBLE
     * the 6.7s for 100k well-spread vectors over 256 centroids (~2e7
     * in-cluster pairs), i.e. 10x less data costing 2x more; the guard
@@ -1582,7 +1582,7 @@ object Dedup {
     * tail; shingles even more so). A closed small vocabulary — every
     * token's df ≫ 1 — has no rarity signal, prefixes can't prune, and
     * the per-token candidate join goes quadratic: measured live in the
-    * r12 [[graft.tools.DedupScaleSmoke]] phase, a 5k-word vocab over
+    * r12 dedup scale smoke ([[graft.tools.Smoke]]), a 5k-word vocab over
     * 200k docs ran 15+ minutes where the 1M-word Zipf corpus of the
     * same size completes in seconds. `maxPrefixBucket` (> 0 to enable)
     * turns that silent wall into a loud one exactly like

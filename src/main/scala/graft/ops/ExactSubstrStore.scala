@@ -136,20 +136,6 @@ object ExactSubstrStore {
       r.getAs[Int]("n_buckets"))
   }
 
-  /** Land `df` (__gk, id, pos) as the named shard's partition,
-    * bucketed map-side — the bucket column is computed per row, never
-    * repartitioned, so the build/ingest write stays exchange-free
-    * (Spark's planned V1 write sorts within tasks by partition cols,
-    * so each task streams its buckets one open file at a time). */
-  private def writeShardPartition(df: DataFrame, path: String,
-      shardId: String, p: Params): Unit =
-    df.withColumn("ingest_shard", lit(shardId))
-      .withColumn("__bkt", bucketOf(p))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_shard", "__bkt")
-      .parquet(path)
-
   /** (id, pos, __gk) anchor windows of `docs` — the batch operator's
     * span frame, bit-identical keying (same tokenizer, same gram
     * join, same xxhash64 digest). */
@@ -196,8 +182,8 @@ object ExactSubstrStore {
     require(p.minLen >= 2, "need minLen >= 2")
     require(p.nBuckets >= 1, "need nBuckets >= 1")
     val spark = docs.sparkSession
-    writeShardPartition(windowFrame(docs, idCol, textCol, p),
-      windowsPath(root), shardId, p)
+    ShardTiers.writeShard(windowFrame(docs, idCol, textCol, p),
+      windowsPath(root), shardId, Some(bucketOf(p)))
     writeMeta(spark, root, p)
   }
 
@@ -263,8 +249,8 @@ object ExactSubstrStore {
       reportDir: Option[String] = None): DataFrame = {
     val p = readMeta(spark, root)
     graft.bench.StageTimers.time("exsubstore.shard_write") {
-      writeShardPartition(windowFrame(shard, idCol, textCol, p),
-        windowsPath(root), shardId, p)
+      ShardTiers.writeShard(windowFrame(shard, idCol, textCol, p),
+        windowsPath(root), shardId, Some(bucketOf(p)))
     }
     val w = windowsRaw(spark, root, p)
       .filter(col("ingest_shard") === lit(shardId))

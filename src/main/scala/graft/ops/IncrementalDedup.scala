@@ -147,16 +147,6 @@ object IncrementalDedup {
           Dedup.lshBandHashes(col("sig"), p.k, p.bands))).as("bb"))
       .select(col("id"), col("bb.band"), col("bb.bucket"))
 
-  /** Idempotent shard append: dynamic partition overwrite replaces exactly
-    * this shard's directory, leaving every other shard's files untouched. */
-  private def writeShardPartition(df: DataFrame, path: String,
-      shardId: String): Unit =
-    df.withColumn("ingest_shard", lit(shardId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_shard")
-      .parquet(path)
-
   private def writeMeta(spark: SparkSession, root: String, p: Params): Unit = {
     spark.range(1).select(
       lit(p.shingleW).as("shingle_w"), lit(p.k).as("k"),
@@ -288,11 +278,11 @@ object IncrementalDedup {
       .select(col("id_a"), col("id_b"))
     val labels = Dedup.resolveClusters(pairs)
     graft.bench.StageTimers.time("incdedup.build_writes") {
-      writeShardPartition(buckets, bucketsPath(root), shardId)
+      ShardTiers.writeShard(buckets, bucketsPath(root), shardId, None)
       // sig-less docs are not index state (they can never pair)
-      writeShardPartition(sh.filter(size(col("sh")) > 0),
-        shinglesPath(root), shardId)
-      writeShardPartition(labels, labelsPath(root), shardId)
+      ShardTiers.writeShard(sh.filter(size(col("sh")) > 0),
+        shinglesPath(root), shardId, None)
+      ShardTiers.writeShard(labels, labelsPath(root), shardId, None)
       writeMeta(spark, root, p)
     }
     // report from the in-memory (checkpointed) labels, NOT a re-read of
@@ -473,10 +463,10 @@ object IncrementalDedup {
     cand.unpersist()
     cleanup()
     graft.bench.StageTimers.time("incdedup.shard_writes") {
-      writeShardPartition(buckets2, bucketsPath(root), shardId)
-      writeShardPartition(sh2.filter(size(col("sh")) > 0),
-        shinglesPath(root), shardId)
-      writeShardPartition(delta, labelsPath(root), shardId)
+      ShardTiers.writeShard(buckets2, bucketsPath(root), shardId, None)
+      ShardTiers.writeShard(sh2.filter(size(col("sh")) > 0),
+        shinglesPath(root), shardId, None)
+      ShardTiers.writeShard(delta, labelsPath(root), shardId, None)
     }
     // report from the in-memory resolution: it covers every shard doc
     // that entered a pair; the rest survive via the left-join miss

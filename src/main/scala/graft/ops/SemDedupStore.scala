@@ -175,22 +175,12 @@ object SemDedupStore {
       .select(col("f.id").as("id"), lit(true).as("dup"), col("f.removed"))
       .groupBy(col("id")).agg(max(col("dup")).as("dup"),
         max(col("removed")).as("removed"))
-    writeShardPartition(assigned.sortWithinPartitions(col("cluster_id")),
-      assignPath(root), shardId)
-    writeShardPartition(deltas, flagsPath(root), shardId)
+    ShardTiers.writeShard(assigned.sortWithinPartitions(col("cluster_id")),
+      assignPath(root), shardId, None)
+    ShardTiers.writeShard(deltas, flagsPath(root), shardId, None)
     assigned.unpersist(); prior.unpersist()
     currentState(spark, root)
   }
-
-  /** Idempotent shard append (the [[IncrementalDedup]] convention):
-    * dynamic partition overwrite replaces exactly this shard's dir. */
-  private def writeShardPartition(df: DataFrame, path: String,
-      shardId: String): Unit =
-    df.withColumn("ingest_shard", lit(shardId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_shard")
-      .parquet(path)
 
   /** Read a shard-partitioned store table, or an EMPTY frame when the
     * path has no `ingest_shard=` partition dirs yet.

@@ -3,7 +3,7 @@ package graft.ops
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -54,7 +54,7 @@ private[ops] object ShardTiers {
     * keys than this probes bucket by bucket, since an unconditional
     * broadcast is an un-refusable driver OOM. The legs replaced a
     * whole-index shuffle: 219s at the 10M-doc 2%-shard ExactSubstr smoke
-    * point against 33.6–40.4s for the legs (DedupScaleSmoke, 4 cores,
+    * point against 33.6–40.4s for the legs (`Smoke dedup`, 4 cores,
     * BASELINE.md r16). Size a store's `nBuckets` so a worst-case shard's
     * distinct keys divided by it stay under the gate. */
   val MaxBroadcastKeys: Long = 4000000L
@@ -73,6 +73,22 @@ private[ops] object ShardTiers {
     else fs.listStatus(dir).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(Part))
       .map(_.getPath.getName.stripPrefix(Part))
+  }
+
+  /** Idempotent shard write: dynamic partition overwrite replaces exactly
+    * `path/ingest_shard=<shardId>`, leaving every other shard's files
+    * untouched. A `bucket` column is computed per row into `__bkt=`
+    * subdirs, never repartitioned, so the write stays exchange-free
+    * (the planned V1 write sorts within tasks by partition columns and
+    * streams one open file at a time). */
+  def writeShard(df: DataFrame, path: String, shardId: String,
+      bucket: Option[Column]): Unit = {
+    val tagged = df.withColumn("ingest_shard", lit(shardId))
+    bucket.fold(tagged)(b => tagged.withColumn("__bkt", b))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(("ingest_shard" +: bucket.map(_ => "__bkt").toSeq): _*)
+      .parquet(path)
   }
 
   /** Bytes under `path`, 0 if it is absent. */

@@ -1024,6 +1024,8 @@ object TextAnalysis {
       preTok: String = "<fim_prefix>", sufTok: String = "<fim_suffix>",
       midTok: String = "<fim_middle>"): DataFrame = {
     require(fimRate >= 0 && fimRate <= 1)
+    Seq("__fim_toks", "__fim_us").foreach(c => require(!df.columns.contains(c),
+      s"fimTransform: input column $c clashes with a reserved temp column"))
     // md5-derived uniforms in [0,1): first 8 hex chars / 2^32. One
     // native pass computes all three salted draws (r17,
     // [[graft.functions.Md5SaltedUniforms]] — bit-identical to the

@@ -436,7 +436,7 @@ object ExtensionQueries {
     "x17_approx_distinct" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
       // TWO aggregates joined on the 3-value flag, a shape chosen by
-      // MEASUREMENT (tools/DebugX17, sf0.1): the sketches must stay in
+      // MEASUREMENT (a one-off probe of the four shapes, sf0.1): the sketches must stay in
       // their own coarse agg (3 groups — map-side HLL merge, the 100 TB
       // production path), because any plan that mixes a distinct agg
       // with them re-keys the FIRST aggregate by (flag, distinct-col,
@@ -959,7 +959,7 @@ object ExtensionQueries {
       // bounded to docs<500 (the whole corpus at sf0.01, a slice above it):
       // the per-doc oracle needs a fixed fixture, and the benched cost must
       // not scale as 2x(LSH + resolveClusters) on the full corpus — the
-      // at-scale incremental path is measured by DedupScaleSmoke instead
+      // at-scale incremental path is measured by `Smoke dedup` instead
       // (same x18-style bounded-oracle-baseline / smoke-scale-path split)
       val docs = t(s, dir, "documents").filter(col("doc_id") < 500)
         .select(col("doc_id"),
@@ -3592,7 +3592,7 @@ object ExtensionQueries {
     // the benched cost flat across scale factors — the equivalence
     // claim itself is structural (the store's windows ARE the batch
     // span frame), not size-dependent; the scale curve lives in
-    // DedupScaleSmoke.
+    // `Smoke dedup`.
     "x182_exact_substr_store" -> ((s, dir) => {
       val root = ParityQueries.tmpPath("graft_exsubstore", dir)
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))

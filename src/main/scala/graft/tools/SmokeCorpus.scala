@@ -2,22 +2,23 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Dedup, Packing, Sampling, TextAnalysis}
+import graft.ops.{Bm25Store, Cdc, CdcStore, Dedup, ExactSubstrStore, IVF, Packing,
+  Sampling, TextAnalysis}
 
 /** End-to-end corpus-build rehearsal at smoke scale — the full
-  * pretraining-data pipeline over the 1M-doc TextScaleSmoke word-soup
-  * corpus, chained the way a production run chains it:
+  * pretraining-data pipeline over the word-soup corpus, chained the way
+  * a production run chains it:
   *
   *   normalize -> langid route -> TRAINED quality gate (the x88/x90
   *   CCNet loop) -> dedup stack (exact digest + MinHash/LSH clusters +
   *   SemDeDup on an embedded subset) -> benchmark decontamination ->
   *   leakage-safe cluster-unit split (x103) -> sequence pack (x97)
   *
-  * The per-op scale smokes prove each stage alone; THIS shakeout is for
+  * The per-op suites prove each stage alone; THIS shakeout is for
   * cross-operator interface drift — column contracts, persist/unpersist
   * discipline across stage boundaries, survivor-frame joins — that
-  * per-op runs cannot see. Per-stage wall times print for BASELINE.md
-  * stage attribution.
+  * per-op runs cannot see. The main chain always runs; the side stages
+  * (2b-2d, 3d, 4i, 4j, 5c, 5d, 6b, 7, 7b) follow the filter.
   *
   * Planted structure (all deterministic, all found by their stages):
   *  - every 7th doc carries a spam marker tail -> the trained gate's
@@ -27,19 +28,16 @@ import graft.ops.{Dedup, Packing, Sampling, TextAnalysis}
   *  - the benchmark set is 500 verbatim corpus docs -> decontamination
   *    must remove their survivors
   */
-object CorpusBuildSmoke {
-  def main(args: Array[String]): Unit = {
-    val n = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val spark = graft.GraftSession.local(cores = 8)
+private[tools] object SmokeCorpus {
+  def run(r: Smoke.Run): Unit = {
+    import r._
     import spark.implicits._
     // disk-backed stage-boundary checkpoints (3c/4h): the literal
     // write-and-read-back a production corpus boundary is. The
     // localCheckpoint spelling pinned multi-GB partition blocks in the
     // 8g driver heap and OOM'd the 10M run at stage 4h; reliable
     // checkpoints stream to disk instead.
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("corpus_build_ckpt").toString
-    spark.sparkContext.setCheckpointDir(ckptDir)
+    spark.sparkContext.setCheckpointDir(path("checkpoints"))
     // shuffle parallelism scales with the corpus — the production rule
     // this smoke exists to rehearse: partitions sized so per-task
     // aggregate state fits the heap. At 10M docs the window aggregates
@@ -48,26 +46,18 @@ object CorpusBuildSmoke {
     spark.conf.set("spark.sql.shuffle.partitions",
       math.max(8L, n / 250000L).toString)
 
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[corpus-build] $label%-40s ${(System.nanoTime() - t0) / 1e9}%8.2fs"); r
-    }
-
     // content key: dup/near-dup docs share their neighbor's token stream
     val ck = when(col("id") % 50 === 1, col("id") - 1)
       .when(col("id") % 50 === 2, col("id") - 2)
       .otherwise(col("id"))
-    def toksOf(idc: org.apache.spark.sql.Column) =
-      transform(sequence(lit(0), lit(39)), p =>
-        concat(lit("w"), pmod(xxhash64(lit(7), idc, p), lit(5000))))
-    val toks = toksOf(ck)
+    val toks = Smoke.words(ck, 7)
     val body = when(col("id") % 50 === 2,
         concat_ws(" ", slice(toks, 1, 32)))          // 80% prefix near-dup
       // r14: 20-token verbatim prefix of doc id-3 + own 20-token tail —
       // 3-shingle Jaccard ~0.31, BELOW the LSH threshold (survives 4e),
       // exactly the organic-clone shape ExactSubstr keep-one (4h) is for
       .when(col("id") % 50 === 3,
-        concat_ws(" ", concat(slice(toksOf(col("id") - 3), 1, 20),
+        concat_ws(" ", concat(slice(Smoke.words(col("id") - 3, 7), 1, 20),
           slice(toks, 21, 20))))
       .otherwise(concat_ws(" ", toks))
     val corpus = spark.range(0, n, 1, 32)
@@ -85,12 +75,12 @@ object CorpusBuildSmoke {
         concat(lit("lang"), pmod(col("id"), lit(8)).cast("string"))
           .as("lang"))
 
-    time(s"0 corpus materialize ($n docs)")(corpus.count())
+    timed(s"0 corpus materialize ($n docs)")(corpus.count())
 
     // 1. normalize -------------------------------------------------------
     val normed = TextAnalysis.normalizeText(corpus, "text", "normalized")
       .select(col("doc_id"), col("normalized").as("text"), col("lang"))
-    time("1 normalize (map-only)")(normed.count())
+    timed("1 normalize (map-only)")(normed.count())
 
     // 2. langid route (word-soup is 'unknown' -> declared-lang fallback,
     // the production rule for sub-threshold detector confidence) --------
@@ -100,7 +90,7 @@ object CorpusBuildSmoke {
           .otherwise(col("predicted_lang")))
       .select(col("doc_id"), col("text"), col("route"))
       .persist()
-    time("2 langid route")(routed.count())
+    timed("2 langid route")(routed.count())
 
     // 2b. rule-based filters (Gopher bundle + blocklist), measurement
     // pass — production runs rules BEFORE the learned gate; word-soup
@@ -114,7 +104,7 @@ object CorpusBuildSmoke {
         sum(when(col("gopher_pass"), 1L).otherwise(0L)).as("pass"),
         sum(when(col("blocked"), 1L).otherwise(0L)).as("blocked")).head()
       require(r.getLong(1) == 0L, "blocklist must not fire on this corpus")
-      println(s"[corpus-build]   gopher pass ${r.getLong(0)} of $n")
+      say(s"  gopher pass ${r.getLong(0)} of $n")
     }
     // 2c. entropy filter (r10 s2): one codegen'd per-row loop; word-soup
     // has healthy entropy by construction, so this prices the scan and
@@ -132,12 +122,12 @@ object CorpusBuildSmoke {
           routed.filter(col("route") === "lang0"), "text",
           buckets = 1024)
         .agg(avg(col("log_weight")), max(col("log_weight"))).head()
-      println(f"[corpus-build]   dsir mean=${w.getDouble(0)}%.4f max=${w.getDouble(1)}%.4f")
+      say(f"  dsir mean=${w.getDouble(0)}%.4f max=${w.getDouble(1)}%.4f")
     }
 
     // 3. trained quality gate (x88 train on a ~1% labeled sample, x90
     // gate the full corpus with the learned weights) ---------------------
-    val model = time("3a train hashed logreg (1% sample)") {
+    val model = timed("3a train hashed logreg (1% sample)") {
       val sample = routed.filter(col("doc_id") % 97 === 0)
         .withColumn("y", (col("doc_id") % 7 =!= 0).cast("int"))
       TextAnalysis.trainHashedLogReg(sample, "text", "y",
@@ -148,10 +138,10 @@ object CorpusBuildSmoke {
       .filter(col("label"))
       .select(col("doc_id"), col("text"), col("route"))
       .persist()
-    val nGated = time("3b gate corpus (map-only inference)")(gated.count())
+    val nGated = timed("3b gate corpus (map-only inference)")(gated.count())
     routed.unpersist()
     val keepFrac = nGated.toDouble / n
-    println(f"[corpus-build]   gate kept $nGated (${keepFrac * 100}%.1f%%; spam class is 1/7)")
+    say(f"  gate kept $nGated (${keepFrac * 100}%.1f%%; spam class is 1/7)")
     require(keepFrac > 0.70 && keepFrac < 0.95,
       s"gate kept fraction $keepFrac outside sanity range — training drifted")
 
@@ -173,7 +163,7 @@ object CorpusBuildSmoke {
     val lmSample = gated.filter(col("doc_id") % lmStride === 0 &&
         col("doc_id") % 11 =!= 0 && col("doc_id") % 7 =!= 0)
       .select(col("text"))
-    val pplFiltered = time("3c paragraph-perplexity filter (KN, corpus-wide)") {
+    val pplFiltered = timed("3c paragraph-perplexity filter (KN, corpus-wide)") {
       val probeParas = gated.filter(col("doc_id") % 101 === 0)
         .select(col("doc_id"),
           posexplode(org.apache.spark.sql.functions
@@ -200,7 +190,7 @@ object CorpusBuildSmoke {
       require(natMax < plantMin,
         s"probe populations overlap: natural max $natMax vs plant min $plantMin")
       val maxNll = (natMax + plantMin) / 2
-      println(f"[corpus-build]   threshold $maxNll%.3f (natural <= $natMax%.3f, plant >= $plantMin%.3f)")
+      say(f"  threshold $maxNll%.3f (natural <= $natMax%.3f, plant >= $plantMin%.3f)")
       // stage-boundary lineage truncation (the r11 plan-render lesson's
       // analysis-cost sibling): the filter's lazy plan carries the whole
       // KN scoring tower plus the trained gate's 2048 literal weights,
@@ -217,7 +207,7 @@ object CorpusBuildSmoke {
         sum(col("n_paras") - col("n_kept")),
         sum(when(col("n_paras") > col("n_kept") &&
           pmod(col("doc_id"), lit(11)) =!= 0, 1L).otherwise(0L))).head()
-      println(s"[corpus-build]   ${r.getLong(1)} paragraphs dropped over ${r.getLong(0)} docs")
+      say(s"  ${r.getLong(1)} paragraphs dropped over ${r.getLong(0)} docs")
       require(r.getLong(0) == nGated,
         "no document may vanish: every doc keeps its natural paragraph")
       require(r.getLong(2) == 0,
@@ -244,7 +234,7 @@ object CorpusBuildSmoke {
     gated.unpersist()
 
     // 4. dedup stack -----------------------------------------------------
-    val exactIds = time("4a exact dedup (8-byte digest key)") {
+    val exactIds = timed("4a exact dedup (8-byte digest key)") {
       val s = Dedup.exactByDigest(pplFiltered, "text", "doc_id").persist()
       s.count(); s
     }
@@ -252,17 +242,17 @@ object CorpusBuildSmoke {
       .select(col("doc_id"), col("text"), col("route"))
       .join(exactIds.select(col("doc_id")), Seq("doc_id"),
       "left_semi").persist()
-    time("4b exact survivors (semi-join)")(exactKept.count())
+    timed("4b exact survivors (semi-join)")(exactKept.count())
     pplFiltered.unpersist(); exactIds.unpersist()
-    val pairs = time("4c minhash/LSH near-dup pairs") {
+    val pairs = timed("4c minhash/LSH near-dup pairs") {
       val p = Dedup.minhashLshPairs(exactKept, "doc_id", "text",
         shingleW = 3, k = 32, bands = 8, threshold = 0.5).persist()
       p.count(); p
     }
-    val labels = time("4d cluster resolution (union-find)") {
+    val labels = timed("4d cluster resolution (union-find)") {
       val l = Dedup.resolveClusters(pairs).persist(); l.count(); l
     }
-    val nearKept = time("4e near-dup survivors") {
+    val nearKept = timed("4e near-dup survivors") {
       val k = Dedup.dedupByClusters(exactKept, "doc_id", pairs).persist()
       k.count(); k
     }
@@ -271,7 +261,7 @@ object CorpusBuildSmoke {
     // SemDeDup leg on the embedded 5% subset (production embeds a slice,
     // not the corpus): 16-dim token-hash histograms as the stand-in
     // embedding, k-means centroids trained in-pipeline
-    val semDropped = time("4f SemDeDup (5% embedded subset)") {
+    val semDropped = timed("4f SemDeDup (5% embedded subset)") {
       val sub = nearKept.filter(col("doc_id") % 20 === 0)
       val hist = sub.select(col("doc_id"),
           explode(TextAnalysis.tokens(col("text"))).as("t"))
@@ -287,7 +277,7 @@ object CorpusBuildSmoke {
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("v")))),
           s => s.getField("v")).as("vec"))
         .persist()
-      val model = graft.ops.IVF.train(vecs, "doc_id", "vec",
+      val model = IVF.train(vecs, "doc_id", "vec",
         nc = 256, iters = 2)
       val cents = model.centroids.zipWithIndex
         .map { case (c, i) => (i.toLong, c.toSeq) }.toSeq.toDF("cid", "cv")
@@ -298,7 +288,7 @@ object CorpusBuildSmoke {
       vecs.unpersist()
       dropped
     }
-    val dedupedMinhash = time("4g post-dedup corpus (checkpoint boundary)") {
+    val dedupedMinhash = timed("4g post-dedup corpus (checkpoint boundary)") {
       // third stage-boundary cut: this frame feeds 4h twice (dedup
       // input + route join) and the heap at 10M cannot also hold an
       // 8.4M-doc deserialized persist next to 4h's aggregates
@@ -309,7 +299,7 @@ object CorpusBuildSmoke {
       // accumulated by the LM/dedup stages (KN count tables, candidate
       // frames) — the Caching.releaseAll contract's designed call site
       val released = graft.ops.Caching.releaseAll()
-      println(s"[corpus-build]   released $released scoped cache subtrees")
+      say(s"  released $released scoped cache subtrees")
       d
     }
 
@@ -319,7 +309,7 @@ object CorpusBuildSmoke {
     // LSH Jaccard threshold, so they survive 4e by design; this stage
     // must trim exactly those 20 shared tokens from the clone while the
     // canonical (smaller-id) copy keeps its text
-    val deduped = time("4h exact-substring keep-one (variable length)") {
+    val deduped = timed("4h exact-substring keep-one (variable length)") {
       val es = Dedup.exactSubstrDedup(dedupedMinhash, "doc_id", "text",
         minLen = 20, digestKeys = true).persist()
       val r = es.agg(
@@ -336,7 +326,7 @@ object CorpusBuildSmoke {
           .otherwise(0L)),
         sum(when(col("n_removed") > 0 && pmod(col("id"), lit(50)) === 3, 1L)
           .otherwise(0L))).head()
-      println(s"[corpus-build]   substr trimmed ${r.getLong(0)} docs / " +
+      say(s"  substr trimmed ${r.getLong(0)} docs / " +
         s"${r.getLong(1)} tokens (${r.getLong(3)} planted clones + " +
         s"${r.getLong(0) - r.getLong(3)} LSH-leak backstops)")
       require(r.getLong(2) == 0L,
@@ -370,16 +360,15 @@ object CorpusBuildSmoke {
     // batch run is the ~250s cost the store exists to avoid, so it is
     // SKIPPED (logged, not silent) and the planted requires carry the
     // check.
-    {
-      val esRoot = System.getProperty("java.io.tmpdir") +
-        s"/graft_corpus_exsub_p${ProcessHandle.current().pid()}"
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(esRoot))
-      time("4i exsub-store index build (once, amortized)") {
-        graft.ops.ExactSubstrStore.buildIndex(deduped, "doc_id", "text",
-          esRoot, graft.ops.ExactSubstrStore.Params(minLen = 20,
-            digestKeys = true))
-      }
-      val srcMod = math.max(n / 2000L, 1L)
+    val esRoot = path("corpus_exsub")
+    val esIndex = time("4i exsub-store index build (once, amortized)") {
+      ExactSubstrStore.buildIndex(deduped, "doc_id", "text", esRoot,
+        ExactSubstrStore.Params(minLen = 20, digestKeys = true))
+    }
+    val srcMod = math.max(n / 2000L, 1L)
+    // disk-backed shards: timing a computed text column charges its
+    // generation to the operator under test
+    val esShard = time("4i exsub-store shard (2k fresh + prefix clones)") {
       val cloneTail = transform(sequence(lit(0), lit(19)),
         j => concat(lit("cl"), col("doc_id"), lit("t"), j))
       val shardClones = deduped
@@ -393,38 +382,37 @@ object CorpusBuildSmoke {
         .select((col("id") + 90000000L).as("doc_id"),
           concat_ws(" ", transform(sequence(lit(0), lit(59)),
             j => concat(lit("fs"), col("id"), lit("t"), j))).as("text"))
-      // disk-backed shard, the DedupScaleSmoke rule: timing a computed
-      // text column charges its generation to the operator under test
-      val shardPath = esRoot + "_shard"
-      shardFresh.unionByName(shardClones)
-        .write.mode("overwrite").parquet(shardPath)
-      val shardPq = spark.read.parquet(shardPath)
-      val nClones = shardPq.filter(col("doc_id") >= 95000000L).count()
+      val shard = materialize("corpus_exsub_shard",
+        shardFresh.unionByName(shardClones))
+      val nClones = shard.filter(col("doc_id") >= 95000000L).count()
       require(nClones >= 1000L, s"fixture: expected >=1000 clones, $nClones")
-      val esRep = time(s"4i exsub-store daily-shard ingest (${2000 + nClones})") {
-        graft.ops.ExactSubstrStore.addShard(spark, esRoot, shardPq,
-          "doc_id", "text", "day1")
-      }
-      require(esRep.filter(col("id") >= 95000000L &&
+      shard
+    }
+    val esRep = time("4i exsub-store daily-shard ingest") {
+      esIndex()
+      val rep = ExactSubstrStore.addShard(spark, esRoot, esShard(),
+        "doc_id", "text", "day1")
+      require(rep.filter(col("id") >= 95000000L &&
         col("n_removed") =!= 20L).count() == 0L,
         "every prefix clone must lose exactly its copied 20-token prefix")
-      require(esRep.filter(col("id") >= 90000000L &&
+      require(rep.filter(col("id") >= 90000000L &&
         col("id") < 95000000L && col("n_removed") =!= 0L).count() == 0L,
         "fresh shard docs must be untouched")
+      rep
+    }
+    time("4i store report vs batch union") {
       if (n <= 1000000L) {
         val batchRep = Dedup.exactSubstrDedup(
-            deduped.select(col("doc_id"), col("text")).unionByName(shardPq),
+            deduped.select(col("doc_id"), col("text")).unionByName(esShard()),
             "doc_id", "text", minLen = 20, digestKeys = true)
           .filter(col("id") >= 90000000L)
-        require(batchRep.exceptAll(esRep).count() == 0L &&
-          esRep.exceptAll(batchRep).count() == 0L,
+        require(batchRep.exceptAll(esRep()).count() == 0L &&
+          esRep().exceptAll(batchRep).count() == 0L,
           "store shard report must equal the batch run over the union")
-        println("[corpus-build]   4i store report == batch-union report")
-      } else println("[corpus-build]   4i batch-union equality SKIPPED at " +
+        say("  4i store report == batch-union report")
+      } else say("  4i batch-union equality SKIPPED at " +
         s"n=$n (the ~4h-sized batch cost the store avoids); planted " +
         "requires checked")
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(esRoot))
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(shardPath))
     }
 
     // 4j. CDC re-crawl rehearsal: the chunk-digest store as the
@@ -437,17 +425,14 @@ object CorpusBuildSmoke {
     // the report is checked verbatim against Cdc.chunkReuse over the
     // explicit union (the 4i convention: above that, the corpus-sized
     // re-chunk is the cost the store avoids — logged skip).
-    {
-      val cdcRoot = System.getProperty("java.io.tmpdir") +
-        s"/graft_corpus_cdc_p${ProcessHandle.current().pid()}"
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(cdcRoot))
-      val cdcParams = graft.ops.CdcStore.Params(family = "gear",
-        maskBits = 5, minLen = 32, maxLen = 256)
-      time("4j cdc-store build (once, amortized)") {
-        graft.ops.CdcStore.build(deduped.select(col("doc_id"), col("text")),
-          "doc_id", "text", cdcRoot, cdcParams)
-      }
-      val srcMod = math.max(n / 2000L, 1L)
+    val cdcRoot = path("corpus_cdc")
+    val cdcParams = CdcStore.Params(family = "gear",
+      maskBits = 5, minLen = 32, maxLen = 256)
+    val cdcStore = time("4j cdc-store build (once, amortized)") {
+      CdcStore.build(deduped.select(col("doc_id"), col("text")),
+        "doc_id", "text", cdcRoot, cdcParams)
+    }
+    val cdcShard = time("4j cdc-store re-crawl shard") {
       val recrawlSame = deduped.filter(pmod(col("doc_id"), lit(srcMod)) === 3)
         .select((col("doc_id") + 85000000L).as("doc_id"), col("text"))
       val recrawlEdit = deduped.filter(pmod(col("doc_id"), lit(srcMod)) === 4)
@@ -457,44 +442,43 @@ object CorpusBuildSmoke {
         .select((col("id") + 87000000L).as("doc_id"),
           concat_ws(" ", transform(sequence(lit(0), lit(59)),
             j => concat(lit("cf"), col("id"), lit("t"), j))).as("text"))
-      val cdcShardPath = cdcRoot + "_shard"
-      recrawlSame.unionByName(recrawlEdit).unionByName(recrawlFresh)
-        .write.mode("overwrite").parquet(cdcShardPath)
-      val cdcShard = spark.read.parquet(cdcShardPath)
-      val shardN = cdcShard.count()
-      val cdcRep = time(s"4j cdc-store re-crawl ingest ($shardN)") {
-        graft.ops.CdcStore.addShard(spark, cdcRoot, cdcShard,
-          "doc_id", "text", "day1")
-      }
-      require(cdcRep.filter(col("id") >= 85000000L && col("id") < 86000000L &&
+      materialize("corpus_cdc_shard",
+        recrawlSame.unionByName(recrawlEdit).unionByName(recrawlFresh))
+    }
+    val cdcRep = time("4j cdc-store re-crawl ingest") {
+      cdcStore()
+      val rep = CdcStore.addShard(spark, cdcRoot, cdcShard(),
+        "doc_id", "text", "day1")
+      require(rep.filter(col("id") >= 85000000L && col("id") < 86000000L &&
         col("reused_frac") =!= 1.0).count() == 0L,
         "every verbatim re-crawled page must read fully reused")
-      require(cdcRep.filter(col("id") >= 87000000L &&
+      require(rep.filter(col("id") >= 87000000L &&
         col("n_reused") =!= 0L).count() == 0L,
         "fresh pages (disjoint vocabulary) must reuse nothing")
-      val editStats = cdcRep.filter(col("id") >= 86000000L &&
+      val editStats = rep.filter(col("id") >= 86000000L &&
           col("id") < 87000000L && col("n_chunks") >= 3)
         .agg(avg(col("reused_frac")), count(lit(1))).head()
       require(editStats.getLong(1) == 0L || editStats.getDouble(0) >= 0.5,
         s"head-edited pages must resync: avg frac ${editStats.getDouble(0)}")
-      println(f"[corpus-build]   4j edited-page resync avg " +
+      say(f"  4j edited-page resync avg " +
         f"${editStats.getDouble(0)}%.3f over ${editStats.getLong(1)} docs")
+      rep
+    }
+    time("4j store report vs chunkReuse batch") {
       if (n <= 1000000L) {
         val chunk = (d: org.apache.spark.sql.DataFrame) =>
-          graft.ops.Cdc.chunks(d, "doc_id", "text", cdcParams.maskBits,
+          Cdc.chunks(d, "doc_id", "text", cdcParams.maskBits,
             cdcParams.minLen, cdcParams.maxLen)
-        val batchRep = graft.ops.Cdc.chunkReuse(
-          chunk(deduped.select(col("doc_id"), col("text"))), chunk(cdcShard),
+        val batchRep = Cdc.chunkReuse(
+          chunk(deduped.select(col("doc_id"), col("text"))), chunk(cdcShard()),
           minReuseLen = cdcParams.minLen)
-        require(batchRep.exceptAll(cdcRep).count() == 0L &&
-          cdcRep.exceptAll(batchRep).count() == 0L,
+        require(batchRep.exceptAll(cdcRep()).count() == 0L &&
+          cdcRep().exceptAll(batchRep).count() == 0L,
           "store re-crawl report must equal chunkReuse over the union")
-        println("[corpus-build]   4j store report == chunkReuse batch report")
-      } else println("[corpus-build]   4j chunkReuse equality SKIPPED at " +
+        say("  4j store report == chunkReuse batch report")
+      } else say("  4j chunkReuse equality SKIPPED at " +
         s"n=$n (the corpus-sized re-chunk the store avoids); planted " +
         "requires checked")
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(cdcRoot))
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(cdcShardPath))
     }
 
     // 5. benchmark decontamination (500 verbatim corpus docs): the
@@ -504,15 +488,15 @@ object CorpusBuildSmoke {
     // is flagged-sized, not corpus-sized)
     val bench = corpus.filter(col("doc_id") % 2000 === 17)
       .select(col("text")).limit(500)
-    val flagged = time("5a bloom screen (map-only, corpus-wide)") {
+    val flagged = timed("5a bloom screen (map-only, corpus-wide)") {
       val f = TextAnalysis.contaminationBloom(deduped, bench,
           "doc_id", "text")
         .filter(col("maybe_contaminated")).select(col("doc_id")).persist()
       val nf = f.count()
-      println(s"[corpus-build]   screen flagged $nf docs for the exact pass")
+      say(s"  screen flagged $nf docs for the exact pass")
       f
     }
-    val cleaned = time("5b exact decontaminate (flagged slice only)") {
+    val cleaned = timed("5b exact decontaminate (flagged slice only)") {
       val flaggedDocs = deduped.join(flagged, Seq("doc_id"), "left_semi")
       val dirty = TextAnalysis.decontaminateParagraphs(flaggedDocs, bench,
           "doc_id", "text")
@@ -531,10 +515,10 @@ object CorpusBuildSmoke {
       val benchIdx = bench.select(
         row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy(col("text"))).cast("long").as("bench_id"), col("text"))
-      val hits = graft.ops.Dedup.winnowContamination(deduped, "doc_id",
+      val hits = Dedup.winnowContamination(deduped, "doc_id",
         "text", benchIdx, "bench_id", "text", k = 16, w = 4, minShared = 3)
       val r = hits.agg(count(lit(1)), countDistinct(col("doc_id"))).head()
-      println(s"[corpus-build]   span hits=${r.getLong(0)} over " +
+      say(s"  span hits=${r.getLong(0)} over " +
         s"${r.getLong(1)} docs (verbatim bench members must all surface)")
     }
 
@@ -549,43 +533,38 @@ object CorpusBuildSmoke {
     // benchmark item that survives in the corpus verbatim must retrieve
     // ITSELF at rank 1 (the query is the doc's full token multiset —
     // nothing else can outscore it).
-    locally {
-      val bmRoot = System.getProperty("java.io.tmpdir") +
-        s"/graft_corpus_bm25_p${ProcessHandle.current().pid()}"
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(bmRoot))
-      time("5d bm25-store build (once, amortized)") {
-        graft.ops.Bm25Store.build(deduped.select(col("doc_id"), col("text")),
-          "doc_id", "text", bmRoot, graft.ops.Bm25Store.Params(nBuckets = 32))
-      }
+    val bmRoot = path("corpus_bm25")
+    val bmStore = time("5d bm25-store build (once, amortized)") {
+      Bm25Store.build(deduped.select(col("doc_id"), col("text")),
+        "doc_id", "text", bmRoot, Bm25Store.Params(nBuckets = 32))
+    }
+    time("5d bm25-store benchmark probe (60 queries)") {
+      bmStore()
       val qframe = bench.limit(60).select(
         row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy(col("text"))).cast("long").as("qid"),
         col("text").as("qtext"))
-      time("5d bm25-store benchmark probe (60 queries)") {
-        val survivors = qframe.join(
-          deduped.select(col("text").as("qtext")), Seq("qtext"), "left_semi")
-          .count()
-        val top1 = graft.ops.Bm25Store.topK(spark, bmRoot, qframe,
-            "qid", "qtext", k = 3)
-          .filter(col("rank") === 1)
-        val selfHits = top1
-          .join(deduped.select(col("doc_id").as("id"), col("text")), Seq("id"))
-          .join(qframe, Seq("qid"))
-          .filter(col("text") === col("qtext")).count()
-        println(s"[corpus-build]   bm25 probe: $selfHits/$survivors " +
-          "surviving benchmark items retrieved themselves at rank 1")
-        require(selfHits == survivors,
-          "every surviving verbatim benchmark item must self-retrieve at rank 1")
-      }
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(bmRoot))
+      val survivors = qframe.join(
+        deduped.select(col("text").as("qtext")), Seq("qtext"), "left_semi")
+        .count()
+      val top1 = Bm25Store.topK(spark, bmRoot, qframe, "qid", "qtext", k = 3)
+        .filter(col("rank") === 1)
+      val selfHits = top1
+        .join(deduped.select(col("doc_id").as("id"), col("text")), Seq("id"))
+        .join(qframe, Seq("qid"))
+        .filter(col("text") === col("qtext")).count()
+      say(s"  bm25 probe: $selfHits/$survivors " +
+        "surviving benchmark items retrieved themselves at rank 1")
+      require(selfHits == survivors,
+        "every surviving verbatim benchmark item must self-retrieve at rank 1")
     }
 
     // 6. leakage-safe split on the near-dup cluster labels ---------------
-    val split = time("6 leakage-safe cluster-unit split") {
+    val split = timed("6 leakage-safe cluster-unit split") {
       val s = Sampling.leakageSafeSplit(cleaned, "doc_id", labels).persist()
       val counts = s.groupBy(col("split")).count()
         .as[(String, Long)].collect().toMap
-      println(s"[corpus-build]   split counts: $counts")
+      say(s"  split counts: $counts")
       s
     }
     cleaned.unpersist(); labels.unpersist(); pairs.unpersist()
@@ -604,7 +583,7 @@ object CorpusBuildSmoke {
       val alloc = Sampling.unimaxMixture(train, "route", "text",
         budget, epochCap = 2.0)
       val rows = alloc.orderBy(col("source")).collect()
-      rows.foreach(r => println(s"[corpus-build]   unimax $r"))
+      rows.foreach(r => say(s"  unimax $r"))
       val tgt = rows.map(_.getLong(2)).sum
       require(math.abs(tgt - budget) <= rows.length,
         s"allocated $tgt vs budget $budget — water filling drifted")
@@ -619,7 +598,7 @@ object CorpusBuildSmoke {
         "route", "doc_id", "token_cnt", 2048L)
       val r = packed.agg(count(lit(1)).as("n_rows"),
         max(col("seq_id")).as("max_seq")).head()
-      println(s"[corpus-build]   packed incidence rows=${r.getLong(0)} " +
+      say(s"  packed incidence rows=${r.getLong(0)} " +
         s"sequences=${r.getLong(1) + 1}")
     }
 
@@ -635,11 +614,10 @@ object CorpusBuildSmoke {
         sum(col("token_cnt"))).head()
       val waste = r.getLong(1).toDouble /
         (r.getLong(1) + r.getLong(2)).toDouble
-      println(f"[corpus-build]   batch rows=${r.getLong(0)} pad-waste=" +
+      say(f"  batch rows=${r.getLong(0)} pad-waste=" +
         f"${waste * 100}%.1f%% (bucketWidth bounds it by construction)")
     }
     split.unpersist()
 
-    spark.stop()
   }
 }

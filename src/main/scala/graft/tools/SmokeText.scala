@@ -1,41 +1,23 @@
 package graft.tools
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Packing, TextAnalysis}
+import graft.ops.{Bm25Store, Cdc, CdcStore, Dedup, Multimodal, Packing, Sampling,
+  TextAnalysis}
 
-/** Text-pipeline-at-scale probe: 1M synthetic word-soup documents (~40
-  * tokens each, distributed generation) through the per-row corpus ops and
-  * the windowed/aggregated ones. Evidence that the tokenize-once explode
-  * shapes and shard-local windows hold far beyond the 500-doc harness
-  * table (2000x sf0.1): everything here is a constant number of
-  * shuffles independent of corpus size. */
-object TextScaleSmoke {
-  def main(args: Array[String]): Unit = {
-    val n = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val spark = graft.GraftSession.local(cores = 8)
-
-    val corpus = spark.range(0, n, 1, 32)
-      .select(col("id").as("doc_id"),
-        concat_ws(" ", (0 until 40).map { p =>
-          concat(lit("w"), pmod(xxhash64(lit(7), col("id"), lit(p)), lit(5000))
-            .cast("string"))
-        }: _*).as("text"),
-        concat(lit("lang"), pmod(col("id"), lit(8)).cast("string")).as("lang"))
-
-    // optional 2nd arg: substring filter on stage labels, for standalone
-    // scale points (e.g. `TextScaleSmoke 10000000 exact-substring` runs
-    // only the ExactSubstr stage at 10M without paying the ~25 other
-    // stages at that size). The corpus-materialize reference always runs.
-    val only = args.lift(1)
-    def time[T](label: String)(f: => T): Unit = {
-      if (only.exists(o => !label.contains(o) && !label.startsWith("corpus")))
-        return
-      val t0 = System.nanoTime(); val r = f
-      println(f"[text-scale] $label%-34s ${(System.nanoTime() - t0) / 1e9}%8.2fs")
-    }
-
-    time(s"corpus materialize ($n docs)")(corpus.count())
+/** Text pipeline at scale: n word-soup documents (~40 tokens each)
+  * through the per-row corpus ops and the windowed/aggregated ones.
+  * Evidence that the tokenize-once explode shapes and shard-local windows
+  * hold far beyond the 500-doc harness table (2000x sf0.1 at 1M):
+  * everything here is a constant number of shuffles independent of
+  * corpus size. Filter e.g. `CDC|BM25` for the two store families. */
+private[tools] object SmokeText {
+  def run(r: Smoke.Run): Unit = {
+    import r._
+    val corpus = soupCorpus.withColumn("lang",
+      concat(lit("lang"), pmod(col("doc_id"), lit(8)).cast("string")))
+    timed(s"corpus materialize ($n docs)")(corpus.count())
     time("quality metrics (map-only)")(
       TextAnalysis.qualityMetrics(corpus).agg(sum("token_cnt")).head())
     time("boilerplate + PII scrub (per-row)")(
@@ -50,121 +32,105 @@ object TextScaleSmoke {
     // same corpus with every third doc head-edited — reuse must read
     // ~2/3 exact-1.0 plus resynced tails, the edit-stability contract
     // at corpus scale
+    val chunk = (d: DataFrame) =>
+      Cdc.chunks(d, "doc_id", "text", maskBits = 5, minLen = 32, maxLen = 256)
     time("CDC gear chunking (map-only)")(
-      graft.ops.Cdc.chunks(corpus, "doc_id", "text",
-          maskBits = 5, minLen = 32, maxLen = 256)
-        .agg(count(lit(1)), sum("len")).head())
+      chunk(corpus).agg(count(lit(1)), sum("len")).head())
     time("CDC re-crawl delta (digest join)") {
       val v2 = corpus.select(col("doc_id"),
         when(pmod(col("doc_id"), lit(3)) === 0,
           concat(lit("recrawl-edit "), col("text")))
           .otherwise(col("text")).as("text"))
-      val chunk = (d: org.apache.spark.sql.DataFrame) =>
-        graft.ops.Cdc.chunks(d, "doc_id", "text",
-          maskBits = 5, minLen = 32, maxLen = 256)
-      val r = graft.ops.Cdc.chunkReuse(chunk(corpus), chunk(v2))
+      val r = Cdc.chunkReuse(chunk(corpus), chunk(v2))
         .agg(sum(when(col("reused_frac") === 1.0, 1).otherwise(0)),
           avg("reused_frac"), count(lit(1))).head()
-      println(s"[text-scale]   cdc delta: full-reuse=${r.getLong(0)} " +
+      say(s"  cdc delta: full-reuse=${r.getLong(0)} " +
         f"avg_frac=${r.getDouble(1)}%.4f docs=${r.getLong(2)}")
       require(r.getLong(0) >= (n * 2) / 3 - n / 100,
         "unedited docs must reuse every chunk")
     }
+    // one daily shard for both stores (1%, at least 1000 docs): half
+    // fresh docs over an f-prefixed vocabulary unseen by the index, half
+    // verbatim copies of indexed docs
+    val m = math.max(n / 100, 1000L)
+    val day1 = spark.range(0, m / 2, 1, 8)
+      .select((col("id") + 10 * n).as("doc_id"),
+        Smoke.soup(col("id"), 13, prefix = "f").as("text"))
+      .unionByName(corpus.filter(col("doc_id") < m / 2)
+        .select((col("doc_id") + 20 * n).as("doc_id"), col("text")))
     // the store contrast: the delta stage above re-chunks BOTH corpus
     // versions (corpus-sized); the persisted digest store chunks the
     // DAILY SHARD only and probes narrow digest rows — the arrival
     // cost a re-crawl pipeline actually pays
-    val cdcRoot = System.getProperty("java.io.tmpdir") +
-      "/graft_textscale_cdcstore_p" + ProcessHandle.current().pid()
-    val cdcParams = graft.ops.CdcStore.Params(family = "gear",
-      maskBits = 5, minLen = 32, maxLen = 256)
-    time("CDC store build (corpus-sized, once)")(
-      graft.ops.CdcStore.build(corpus, "doc_id", "text", cdcRoot, cdcParams))
+    val cdcRoot = path("cdcstore")
+    val cdcStore = time("CDC store build (corpus-sized, once)")(
+      CdcStore.build(corpus, "doc_id", "text", cdcRoot, CdcStore.Params(
+        family = "gear", maskBits = 5, minLen = 32, maxLen = 256)))
     time("CDC store daily-shard ingest (1%)") {
-      val m = math.max(n / 100, 1000L)
-      // half fresh docs, half verbatim copies of indexed docs — the
-      // copies must read fully reused, the fresh ones (near) nothing
-      val shard = spark.range(0, m / 2, 1, 8)
-        .select((col("id") + 10 * n).as("doc_id"),
-          concat_ws(" ", (0 until 40).map { p =>
-            concat(lit("f"), pmod(xxhash64(lit(13), col("id"), lit(p)),
-              lit(5000)).cast("string"))
-          }: _*).as("text"))
-        .unionByName(corpus.filter(col("doc_id") < m / 2)
-          .select((col("doc_id") + 20 * n).as("doc_id"), col("text")))
-      val rep = graft.ops.CdcStore.addShard(spark, cdcRoot, shard,
-        "doc_id", "text", "day1")
-      val full = rep.filter(col("reused_frac") === 1.0).count()
-      println(s"[text-scale]   cdc store ingest: shard=${m} full-reuse=$full")
+      cdcStore()
+      val full = CdcStore.addShard(spark, cdcRoot, day1, "doc_id", "text",
+        "day1").filter(col("reused_frac") === 1.0).count()
+      say(s"  cdc store ingest: shard=$m full-reuse=$full")
       require(full >= m / 2, "every verbatim copy must read fully reused")
     }
     // BM25: the batch stage re-tokenizes the WHOLE corpus per retrieval
     // batch; the store tokenizes once at build and each probe reads
     // only the query vocabulary's term buckets — columnar, no text.
-    // The in-run require pins batch ≡ store on identical results.
-    locally {
-      import spark.implicits._
-      val bmQs = Seq((1L, "w17 w2345 w999"), (2L, "w4999 w0"),
-        (3L, "w123 w456 w789")).toDF("qid", "qtext")
-      def hitSet(df: org.apache.spark.sql.DataFrame) =
-        df.select(col("qid"), col("id").cast("long"), col("rank"),
-            col("score")).as[(Long, Long, Int, Double)].collect().toSet
-      var batchHits: Set[(Long, Long, Int, Double)] = Set.empty
-      time("BM25 batch retrieval (corpus re-scan)") {
-        batchHits = hitSet(TextAnalysis.bm25TopK(corpus, "doc_id", "text",
-          bmQs, "qid", "qtext", k = 10).withColumnRenamed("doc_id", "id"))
-        println(s"[text-scale]   bm25 batch hits=${batchHits.size}")
-      }
-      val bmRoot = System.getProperty("java.io.tmpdir") +
-        "/graft_textscale_bm25store_p" + ProcessHandle.current().pid()
-      time("BM25 store build (corpus-sized, once)")(
-        graft.ops.Bm25Store.build(corpus, "doc_id", "text", bmRoot,
-          graft.ops.Bm25Store.Params(nBuckets = 64)))
-      time("BM25 store probe (bucket-pruned, no text)") {
-        val got = hitSet(graft.ops.Bm25Store.topK(spark, bmRoot, bmQs,
-          "qid", "qtext", k = 10))
-        require(batchHits.isEmpty || got == batchHits,
-          "store probe must equal the batch re-scan result")
-        println(s"[text-scale]   bm25 store hits=${got.size}")
-      }
-      // decontam-batch probe, WORST-CASE by construction: 200 whole-doc
-      // queries over the word-soup's dense 5000-term vocab touch every
-      // term bucket, and the scoring join's input is Σ_(q,t) df(t) ≈
-      // 200×40×(N/125) rows — the probe's cost ceiling, independent of
-      // corpus TEXT (real corpora have power-law vocab and benchmark
-      // queries touch rare terms, landing far below this bound; the
-      // 3-query stage above shows the pruned typical case)
-      time("BM25 store probe (200-doc decontam batch)") {
-        val dq = corpus.filter(col("doc_id") % 5000 === 7).limit(200)
-          .select(col("doc_id").as("qid"), col("text").as("qtext"))
-        val n1 = graft.ops.Bm25Store.topK(spark, bmRoot, dq,
-            "qid", "qtext", k = 10)
-          .filter(col("rank") === 1 && col("id") === col("qid")).count()
-        println(s"[text-scale]   bm25 decontam batch: self-top1=$n1/200")
-        require(n1 >= 195,
-          "verbatim corpus members must retrieve themselves at rank 1")
-      }
-      time("BM25 store daily-shard ingest (1%)") {
-        val m = math.max(n / 100, 1000L)
-        val shard = spark.range(0, m / 2, 1, 8)
-          .select((col("id") + 10 * n).as("doc_id"),
-            concat_ws(" ", (0 until 40).map { p =>
-              concat(lit("f"), pmod(xxhash64(lit(13), col("id"), lit(p)),
-                lit(5000)).cast("string"))
-            }: _*).as("text"))
-          .unionByName(corpus.filter(col("doc_id") < m / 2)
-            .select((col("doc_id") + 20 * n).as("doc_id"), col("text")))
-        val r = graft.ops.Bm25Store.addShard(spark, bmRoot, shard,
-          "doc_id", "text", "day1").head()
-        println(s"[text-scale]   bm25 ingest: docs=${r.getAs[Long]("n_docs")} " +
-          s"postings=${r.getAs[Long]("n_postings")} " +
-          s"new_terms=${r.getAs[Long]("n_new_terms")}")
-        // the fresh half draws from 5000 f-prefixed values unseen by the
-        // index; the copied half must bring ZERO new vocabulary
-        require(r.getAs[Long]("n_new_terms") >= 4500 &&
-          r.getAs[Long]("n_new_terms") <= 5000,
-          "new vocabulary = the fresh half's f-terms only")
-      }
+    // The in-run require pins batch ≡ store on identical results when
+    // the batch stage ran.
+    val bmQs = spark.createDataFrame(Seq((1L, "w17 w2345 w999"),
+      (2L, "w4999 w0"), (3L, "w123 w456 w789"))).toDF("qid", "qtext")
+    def hitSet(df: DataFrame) = df.select(col("qid"), col("id").cast("long"),
+        col("rank"), col("score")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
+    var batchHits = Option.empty[Set[(Long, Long, Int, Double)]]
+    time("BM25 batch retrieval (corpus re-scan)") {
+      val h = hitSet(TextAnalysis.bm25TopK(corpus, "doc_id", "text",
+        bmQs, "qid", "qtext", k = 10).withColumnRenamed("doc_id", "id"))
+      say(s"  bm25 batch hits=${h.size}")
+      batchHits = Some(h)
+    }
+    val bmRoot = path("bm25store")
+    val bmStore = time("BM25 store build (corpus-sized, once)")(
+      Bm25Store.build(corpus, "doc_id", "text", bmRoot,
+        Bm25Store.Params(nBuckets = 64)))
+    time("BM25 store probe (bucket-pruned, no text)") {
+      bmStore()
+      val got = hitSet(Bm25Store.topK(spark, bmRoot, bmQs, "qid", "qtext", k = 10))
+      require(batchHits.forall(_ == got),
+        "store probe must equal the batch re-scan result")
+      say(s"  bm25 store hits=${got.size}")
+    }
+    // decontam-batch probe, WORST-CASE by construction: 200 whole-doc
+    // queries over the word-soup's dense 5000-term vocab touch every
+    // term bucket, and the scoring join's input is Σ_(q,t) df(t) ≈
+    // 200×40×(N/125) rows — the probe's cost ceiling, independent of
+    // corpus TEXT (real corpora have power-law vocab and benchmark
+    // queries touch rare terms, landing far below this bound; the
+    // 3-query stage above shows the pruned typical case). The query
+    // stride spreads the 200 docs over the corpus at any n.
+    time("BM25 store probe (200-doc decontam batch)") {
+      bmStore()
+      val dq = corpus.filter(col("doc_id") % math.max(n / 200, 8L) === 7)
+        .limit(200).select(col("doc_id").as("qid"), col("text").as("qtext"))
+      val n1 = Bm25Store.topK(spark, bmRoot, dq, "qid", "qtext", k = 10)
+        .filter(col("rank") === 1 && col("id") === col("qid")).count()
+      say(s"  bm25 decontam batch: self-top1=$n1/200")
+      require(n1 >= 195,
+        "verbatim corpus members must retrieve themselves at rank 1")
+    }
+    time("BM25 store daily-shard ingest (1%)") {
+      bmStore()
+      val r = Bm25Store.addShard(spark, bmRoot, day1, "doc_id", "text",
+        "day1").head()
+      say(s"  bm25 ingest: docs=${r.getAs[Long]("n_docs")} " +
+        s"postings=${r.getAs[Long]("n_postings")} " +
+        s"new_terms=${r.getAs[Long]("n_new_terms")}")
+      // the fresh half draws from 5000 f-prefixed values unseen by the
+      // index; the copied half must bring ZERO new vocabulary
+      require(r.getAs[Long]("n_new_terms") >= 4500 &&
+        r.getAs[Long]("n_new_terms") <= 5000,
+        "new vocabulary = the fresh half's f-terms only")
     }
     time("sequence packing (8 shard windows)")(
       Packing.packByBudget(
@@ -177,7 +143,7 @@ object TextScaleSmoke {
     // paragraph corpus: two paragraphs per doc (own text + a shifted copy),
     // so ~half of all paragraphs are duplicates — the realistic shape
     time("paragraph dedup (digest-keyed)")(
-      graft.ops.Dedup.paragraphDedup(
+      Dedup.paragraphDedup(
           corpus.select(col("doc_id"),
             concat_ws("\n\n", col("text"),
               concat(lit("p"), pmod(col("doc_id"), lit(n / 2)).cast("string")))
@@ -185,8 +151,8 @@ object TextScaleSmoke {
           "doc_id", "text")
         .agg(sum(when(col("kept"), 1).otherwise(0))).head())
     time("content-hash split + mixture (map-only + tiny agg)")(
-      graft.ops.Sampling.mixtureByTokenBudget(
-          graft.ops.Sampling.contentHashSplit(corpus, "text")
+      Sampling.mixtureByTokenBudget(
+          Sampling.contentHashSplit(corpus, "text")
             .withColumn("token_cnt", TextAnalysis.tokenCount(col("text"))),
           "lang", "doc_id", "token_cnt", budget = 1000000L)
         .groupBy(col("split"), col("lang")).count().count())
@@ -211,7 +177,7 @@ object TextScaleSmoke {
     // frequent set is tiny but the span/count/rebuild passes see all ~40M
     // token positions; r8 op
     time("repeated-span removal (gram-keyed)")(
-      graft.ops.Dedup.removeRepeatedSpans(
+      Dedup.removeRepeatedSpans(
           corpus.select(col("doc_id"),
             concat(col("text"),
               when(col("doc_id") % 4 === 0,
@@ -223,7 +189,7 @@ object TextScaleSmoke {
     // strings (the op's dominant shuffle byte mover) never leave the
     // map side; spec pins the two paths result-identical
     time("repeated-span removal (digest-keyed)")(
-      graft.ops.Dedup.removeRepeatedSpans(
+      Dedup.removeRepeatedSpans(
           corpus.select(col("doc_id"),
             concat(col("text"),
               when(col("doc_id") % 4 === 0,
@@ -239,7 +205,7 @@ object TextScaleSmoke {
     // merge-walk pays O(tokens + |rm|). Sparse fixtures (above) cannot
     // see the difference — a boilerplate-heavy crawl at 100 TB can.
     time("repeated-span removal (dense boilerplate)")(
-      graft.ops.Dedup.removeRepeatedSpans(
+      Dedup.removeRepeatedSpans(
           corpus.select(col("doc_id"),
             concat(col("text"), lit(" "),
               concat_ws(" ", (0 until 40).map(i => lit(s"b$i")): _*))
@@ -256,7 +222,7 @@ object TextScaleSmoke {
       val cloned = corpus.join(src, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("__ctext"), col("text")).as("text"))
-      graft.ops.Dedup.exactSubstrDedup(cloned, "doc_id", "text",
+      Dedup.exactSubstrDedup(cloned, "doc_id", "text",
           minLen = 20, digestKeys = true)
         .agg(sum("n_removed"), sum(length(col("clean_text")))).head()
     })
@@ -276,12 +242,12 @@ object TextScaleSmoke {
           (0 until 1024).map(i => ((i * 37 + 11) % 21 - 10) / 10.0).toArray)
         .agg(sum(when(col("label"), 1).otherwise(0)), avg("score")).head())
     time("global token offsets (two-level scan)")(
-      graft.ops.Packing.globalTokenOffsets(
+      Packing.globalTokenOffsets(
           corpus.withColumn("n_tokens", TextAnalysis.tokenCount(col("text"))),
           "lang", "doc_id", "n_tokens")
         .agg(max(col("offset"))).head())
     time("rare-ngram links (df-capped join)")(
-      graft.ops.Dedup.rareNgramPairs(
+      Dedup.rareNgramPairs(
           corpus.select(col("doc_id"), concat(col("text"),
             lit(" ra"), pmod(col("doc_id"), lit(250000)).cast("string"),
             lit(" rb"), pmod(col("doc_id"), lit(250000)).cast("string"),
@@ -349,7 +315,7 @@ object TextScaleSmoke {
       TextAnalysis.scriptProfile(corpus, "doc_id", "text")
         .groupBy(col("main_script")).count().count())
     time("repeated-span MASK (digest-keyed)")(
-      graft.ops.Dedup.repeatedSpanMask(
+      Dedup.repeatedSpanMask(
           corpus.select(col("doc_id"),
             concat(col("text"),
               when(col("doc_id") % 4 === 0,
@@ -358,11 +324,11 @@ object TextScaleSmoke {
           "doc_id", "text", n = 5, minCount = 100, digestKeys = true)
         .agg(sum("n_masked"), sum(length(col("mask")))).head())
     time("source overlap (hashed keys, 8 sources)")(
-      graft.ops.Dedup.sourceOverlap(corpus, "lang", "text", n = 3,
+      Dedup.sourceOverlap(corpus, "lang", "text", n = 3,
           hashed = true)
         .agg(sum("n_inter"), count(lit(1))).head())
     time("per-source percentile (8 source windows)")(
-      graft.ops.Sampling.perSourcePercentile(
+      Sampling.perSourcePercentile(
           corpus.select(col("doc_id"), col("lang"),
             (xxhash64(col("doc_id")) % 1000).cast("double").as("score")),
           "lang", "score")
@@ -380,7 +346,7 @@ object TextScaleSmoke {
         (col("doc_id") % 2 === 0).cast("int").as("y"))
       val m = TextAnalysis.trainHashedLogReg(labeled, "text", "y",
         buckets = 1024, epochs = 3, lr = 0.5, useBigrams = false)
-      println(f"[text-scale]   losses=${m.losses.map(l => f"$l%.4f").mkString(" -> ")}")
+      say(f"  losses=${m.losses.map(l => f"$l%.4f").mkString(" -> ")}")
     }
     // r10: chat-turn parse — each doc serialized as a 3-turn transcript
     // (multi-line assistant answer), split + ONE doc-keyed window + one
@@ -404,12 +370,12 @@ object TextScaleSmoke {
     }
     // r10: exact-k and exact-budget deterministic samples per shard
     time("exact-k sample (10k per shard, heap operator)")(
-      graft.ops.Sampling.exactKPerGroup(
+      Sampling.exactKPerGroup(
           corpus.select(col("doc_id"), col("lang")),
           "lang", "doc_id", k = 10000)
         .groupBy(col("lang")).count().count())
     time("budget-prefix sample (1M tokens per shard)")(
-      graft.ops.Sampling.budgetPrefixPerGroup(
+      Sampling.budgetPrefixPerGroup(
           corpus.select(col("doc_id"), col("lang"),
             TextAnalysis.tokenCount(col("text")).cast("long").as("tok")),
           "lang", "doc_id", "tok", budget = 1000000L)
@@ -465,7 +431,7 @@ object TextScaleSmoke {
     // dHash + banded near-dup runs the hash map-only then joins only
     // narrow (id, long) rows
     time("winnow fingerprints (native, full corpus)")(
-      graft.ops.Dedup.winnowFingerprints(corpus, "doc_id", "text")
+      Dedup.winnowFingerprints(corpus, "doc_id", "text")
         .agg(count(lit(1)), expr("bit_xor(fp)")).head())
     val rougeFix = corpus.select(col("doc_id"), col("text").as("cand"),
       concat_ws(" ", (0 until 16).map { p =>
@@ -479,8 +445,7 @@ object TextScaleSmoke {
       encode(concat(col("text"), when(col("doc_id") % 100 === 0,
         lit("!")).otherwise(lit(""))), "UTF-8").as("payload"))
     time("dHash56 (native, full corpus)")(
-      graft.ops.Multimodal.dHash(media)
+      Multimodal.dHash(media)
         .agg(count(lit(1)), expr("bit_xor(dhash)")).head())
-    spark.stop()
   }
 }

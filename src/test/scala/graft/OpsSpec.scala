@@ -380,6 +380,13 @@ class DedupSpec extends SparkSpec {
       .select(graft.functions.Md5ShingleFunctions.md5_minhash_sigs($"sh", 3).as("sig"))
       .head().getSeq[Long](0)
     assert(sig == (0 until 3).map(j => hs.map(h => h60(s"$j:$h")).min))
+    // widest digest input: a 4-digit j prefix plus a 20-byte negative
+    // hash no longer fits a 24-byte reused buffer
+    val neg = Long.MinValue + 1
+    val wide = Seq(Tuple1(Seq(neg))).toDF("sh")
+      .select(graft.functions.Md5ShingleFunctions.md5_minhash_sigs($"sh", 1001).as("sig"))
+      .head().getSeq[Long](0)
+    assert(wide == (0 until 1001).map(j => h60(s"$j:$neg")))
   }
 
   test("portable simhash family recovers planted duplicates; 60-bit range; formula pin") {
@@ -1574,7 +1581,7 @@ class SimilaritySpec extends SparkSpec {
   test("semanticDedup: literal-argmax and large-nc join assignment paths agree") {
     // nc <= 64 burns the argmax into one literal expression; above that
     // the broadcast-join + partial-agg path runs (the literal form blows
-    // Janino's 64KB method limit at nc=256 — found by CorpusBuildSmoke).
+    // Janino's 64KB method limit at nc=256 — found by `Smoke corpus`).
     // Same 5-vector fixture as the semantics test, once with 2 centroids
     // (literal path) and once padded to 66 with never-winning decoys
     // (join path): every output column must agree row for row.
@@ -3228,6 +3235,13 @@ class TextAnalysisSpec extends SparkSpec {
           .filter(_.nonEmpty).toSeq
         assert(rebuilt == text.split(" ").toSeq, (id, fim))
       }
+    }
+    // the transform's temp column names are reserved: an input column
+    // carrying one is refused by name, never silently overwritten
+    Seq("__fim_toks", "__fim_us").foreach { c =>
+      val e = intercept[IllegalArgumentException](TextAnalysis.fimTransform(
+        shorts.withColumn(c, lit(1)), "doc_id", "text", fimRate = 1.0))
+      assert(e.getMessage.contains(c), e.getMessage)
     }
   }
 

@@ -130,7 +130,7 @@ class VectorExpressionsSpec extends SparkSpec {
   test("nearest_centroid_id stays whole-stage-codegen at nc=256 (the unrolled form cannot)") {
     // 256 centroids x 16 dims: the unrolled formulation exceeds Janino's
     // 64KB method limit here and de-codegens the whole stage (measured in
-    // CorpusBuildSmoke); the loop expression must keep the projection
+    // `Smoke corpus`); the loop expression must keep the projection
     // inside WholeStageCodegen with zero codegen fallbacks
     val cents: Array[Array[Double]] = Array.tabulate(256) { c =>
       Array.tabulate(16)(d => ((c * 31 + d * 7) % 101) / 101.0)

@@ -614,5 +614,30 @@ class TextEvalSpec extends SparkSpec {
       .toMap
     assert(got(1) == "a d" && got(5) == "a b c" && got(6) == "" &&
       got(7) == "" && got(8) == "b" && got(9) == "a b" && got(10) == null)
+    // non-nullable tokens nested under when(...): the parent's generated
+    // code reads the child's isNull. spark.range input keeps the plan off
+    // the LocalRelation fold, and CODEGEN_ONLY turns a compile error into
+    // a failure instead of a silent interpreted fallback
+    val key = "spark.sql.codegen.factoryMode"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "CODEGEN_ONLY")
+    try {
+      val ranged = spark.range(0, 40, 1, 2).select(col("id"),
+        array(lit("a"), concat(lit("t"), col("id").cast("string")),
+          lit("b")).as("toks"),
+        array(pmod(col("id"), lit(3)).cast("int")).as("rm"))
+      val even = pmod(col("id"), lit(2)) === 0
+      val nativeW = ranged.select(col("id"),
+        when(even, token_splice(col("toks"), col("rm"))).as("s"))
+      val hofW = ranged.select(col("id"),
+        when(even, array_join(filter(col("toks"), (_, i) =>
+          not(coalesce(array_contains(col("rm"), i), lit(false)))), " ")).as("s"))
+      val a = nativeW.orderBy("id").collect().toSeq
+      assert(a == hofW.orderBy("id").collect().toSeq)
+      assert(a.count(!_.isNullAt(1)) == 20)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 }
